@@ -1,0 +1,41 @@
+package graftbench
+
+/** Minimal JSON rendering for the harness's result and trace files. */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+
+  def num(d: Double): String =
+    if (d.isNaN || d.isInfinite) "null"
+    else if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
+    else java.lang.Double.toString(d)
+
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case i: Int => i.toString
+    case l: Long => l.toString
+    case d: Double => num(d)
+    case f: Float => num(f.toDouble)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(render).mkString("[", ",", "]")
+    case a: Array[_] => a.map(render).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+}
