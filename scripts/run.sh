@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes without sbt overhead.
-#   scripts/run.sh graft.Verify /root/testdata/sf0.01 /tmp/graft_verify
+#   scripts/run.sh graft.Verify <sf_dir> <out_dir>
+# The classes dir is resolved from this script's own checkout, so two
+# checkouts (e.g. a parent and a change) each run their own build.
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CLS="$1"; shift
 JARS=$(ls /opt/spark/jars/*.jar | tr '\n' ':')
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
@@ -19,4 +22,4 @@ OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:$JARS" "$CLS" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$JARS" "$CLS" "$@"

@@ -323,8 +323,7 @@ object Bench {
     * downstream reads (two bucket-join branches + two vector-lookup sides)
     * scan it once instead of recomputing the perturbation map per branch.
     * Data PREP, not query — the bench materializes it outside the timed
-    * region (ScaleStress's embed mode draws the same line) and unpersists
-    * it afterwards.
+    * region and unpersists it afterwards.
     */
   private[graft] def expand10x(s: SparkSession, d: String): DataFrame =
     graft.operators.Dedup
@@ -521,10 +520,12 @@ object Bench {
 
     // A4 tie-in: PLAN (not run) a scan over a many-small-files layout
     // and record files-per-task, so a small-file bin-packing regression
-    // shows up in the per-round detail JSON rather than only in the
-    // ScaleStress receipts. The probe table is built once and reused
-    // across sessions; "files" is the live manifest count (= tasks with
-    // packing opted out), "tasks_packed" the default plan's partitions.
+    // shows up in the per-round detail JSON rather than only in a
+    // latency drift. The probe table is built once and reused across
+    // sessions; "files" is the live manifest count (= tasks with packing
+    // opted out), "tasks_packed" the default plan's partitions.
+    // Plan only: the partition count comes from the scan builder, so
+    // nothing executes.
     def packingProbeJson: String = try {
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -543,9 +544,16 @@ object Bench {
           .write.format("graft-orc").option("graft.manifest", "true")
           .mode("overwrite").save(dir)
       }
-      val unpacked = PlanProbe.plannedPartitions(dir,
-        Map("graft.pack_small_files" -> "false"))
-      val packed = PlanProbe.plannedPartitions(dir, Map.empty)
+      def plannedPartitions(opts: Map[String, String]): Int = {
+        val m = new CaseInsensitiveStringMap(
+          (Map("path" -> dir) ++ opts).asJava)
+        val schema = new graft.sources.v2.GraftOrcDataSource().inferSchema(m)
+        new graft.sources.v2.GraftOrcScanBuilder(schema, m).build()
+          .asInstanceOf[graft.sources.v2.GraftOrcScan]
+          .planInputPartitions().length
+      }
+      val unpacked = plannedPartitions(Map("graft.pack_small_files" -> "false"))
+      val packed = plannedPartitions(Map.empty)
       s"""{"files":$unpacked,"tasks_packed":$packed}"""
     } catch { case _: Throwable => "{}" }
 

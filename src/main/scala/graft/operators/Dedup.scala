@@ -864,7 +864,7 @@ object Dedup {
   /** Per-cluster SemDeDup summary: (cluster, n_vectors, n_dropped).
     * `k` must SCALE with the corpus (clusters bound the pairwise work at
     * sum n_c^2 — a fixed k makes per-cluster pairs quadratic again, the
-    * same lesson as LSH bucket counts; ScaleStress semdedup pins it).
+    * same lesson as LSH bucket counts).
     */
   def semDedupSummary(e: DataFrame, threshold: Double,
                       k: Int = 16): DataFrame = {

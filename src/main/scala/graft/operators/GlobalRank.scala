@@ -52,7 +52,7 @@ object GlobalRank {
 
   /** Frames at or below this row count take the plain window path.
     *
-    * Receipted, not asserted (the `ntilegate` ScaleStress sweep, 3 warm
+    * Measured, not asserted (a frame-size sweep, 3 warm
     * iterations/point at local[32]): the single-partition window beats
     * the distributed offsets path at EVERY measured size — 0.30 s vs
     * 0.73 s at 64k, 0.37 vs 0.97 at 1M, 0.93 vs 3.18 at 16M rows — so

@@ -118,8 +118,8 @@ object TextAnalysis {
       // literal CJK range chars: DuckDB's RE2 rejects \uXXXX escapes
       ("zh" -> "[一-鿿]")
 
-  /** Shared body of ta_bigram_lm (also stressed at 10x by
-    * `graft.ScaleStress bigram`, so the measured arithmetic cannot drift
+  /** Shared body of ta_bigram_lm (TextHashParitySpec drives it directly
+    * on flat and allhot corpora, so the tested arithmetic cannot drift
     * from the oracle-checked query): score `docs(doc_id, text, ...)` by
     * average corpus-wide bigram frequency. Bigrams travel as 60-bit md5
     * fingerprints; the score is a single division of identical integers,
@@ -144,7 +144,7 @@ object TextAnalysis {
     // are colocated in its input partition), so the corpus-count shuffle
     // and the count join-back carry one row per (doc, bigram) — a Zipf
     // corpus that repeats a hot bigram inside documents no longer
-    // amplifies that join key (ScaleStress bigramskew pins this flat).
+    // amplifies that join key.
     // n_bigrams = sum(o) and freq_sum = sum(o*c) reproduce the
     // per-occurrence totals exactly.
     val occ = bi.groupBy(col("doc_id"), col("bg"))
@@ -167,8 +167,9 @@ object TextAnalysis {
     // TakeOrdered barrier + anti-join + union and plans the plain join —
     // the round-8/9 watch on the split's flat-corpus cost, closed with
     // the gate the verdict prescribed. Zipf/allhot adversaries engage it
-    // (ScaleStress receipts). Both branches fold the same LONG sums, so
-    // the gate cannot perturb the oracle-checked results.
+    // (TextHashParitySpec "bigram skew gate"). Both branches fold the
+    // same LONG sums, so the gate cannot perturb the oracle-checked
+    // results.
     val model = counts.select(col("bg"), col("c"))
     val joined = if (skewGate(counts, "kr")) {
       val hot = model.orderBy(col("c").desc, col("bg")).limit(HotKeyK)
@@ -249,8 +250,8 @@ object TextAnalysis {
     // the model probe shows a genuinely skewed join key, the top-K
     // bigrams by count broadcast and join map-side and the de-skewed
     // rest shuffles (one bigram spanning ~every doc stays off any single
-    // reducer — ScaleStress allhot receipt); a flat corpus plans the
-    // plain join and skips the split's overhead.
+    // reducer — TextHashParitySpec "bigram skew gate"); a flat corpus
+    // plans the plain join and skips the split's overhead.
     val model = cb.join(cu, Seq("u"))
       .crossJoin(broadcast(v))
       .select(col("u"), col("w"), col("cb"),

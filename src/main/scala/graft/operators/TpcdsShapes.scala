@@ -38,11 +38,8 @@ object TpcdsShapes {
   private[operators] val oRev =
     "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8))"
 
-  /** q53 body over an injectable lineitem frame — one definition shared by
-    * the QueryDef and ScaleStress's scaled-input twin, so the stressed
-    * arithmetic cannot drift from the oracle-checked query.
-    */
-  private[graft] def netOfReturns(li: DataFrame): DataFrame = {
+  /** q53 body: net revenue per supplier after returns. */
+  private def netOfReturns(li: DataFrame): DataFrame = {
     val ret = li.filter(col("l_returnflag") === "R")
       .select(col("l_orderkey").as("r_orderkey"),
         col("l_linenumber").as("r_linenumber"),
@@ -87,8 +84,10 @@ object TpcdsShapes {
        |      FROM lineitem) src
        |GROUP BY yr""".stripMargin
 
-  /** q57 body over an injectable lineitem frame (see [[netOfReturns]]). */
-  private[graft] def smallQtyRevenue(li: DataFrame): DataFrame = {
+  /** q57 body: count and revenue of lines under 20% of their part's
+    * mean quantity.
+    */
+  private def smallQtyRevenue(li: DataFrame): DataFrame = {
     val perPart = li.groupBy(col("l_partkey").as("pk"))
       .agg(sum(col("l_quantity").cast(DecimalType(18, 2))).as("sum_qty"),
         count(lit(1)).as("cnt"))
@@ -533,8 +532,8 @@ object TpcdsShapes {
     // re-scan either way. The threshold is rearranged to integer-free
     // decimal algebra (qty * 5 * cnt < sum_qty) so the comparison is exact
     // in both engines — a double 0.2*avg would round differently at ties.
-    // (ScaleStress tpcds: the decimal compare, not the join, dominates at
-    // 10x — the oracle-exact arithmetic is the price of hash parity; a
+    // (Measured on a 10x lineitem: the decimal compare, not the join,
+    // dominates — the oracle-exact arithmetic is the price of hash parity; a
     // production pipeline free of the oracle would compare doubles.)
     QueryDef("q57_small_qty_revenue",
       (s, d) => smallQtyRevenue(Tables.lineitem(s, d)),

@@ -153,8 +153,8 @@ object GraftOrcCompact {
     * its scans stay file-count-flat without a scheduler.
     * `graft.compact_zorder='c1[,c2...]'` switches the merge to a layout
     * rewrite sorted on those columns — that is what keeps a keyed
-    * ingest table's stat sidecars range-prunable (the streamingest /
-    * neardup steady-state receipts) batch after batch.
+    * ingest table's stat sidecars range-prunable batch after batch
+    * (GraftOrcMergePruneSpec, GraftOrcStreamIngestSpec).
     * Best-effort: the data commit already succeeded, so a compaction
     * lost to a rival maintenance run is swallowed and any other failure
     * is logged and swallowed (housekeeping never fails a committed
@@ -181,12 +181,12 @@ object GraftOrcCompact {
   private val autoCompacting =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Auto-compaction accounting, for the contention receipts: how much
+  /** Auto-compaction accounting (asserted by GraftOrcCompactSpec): how much
     * maintenance work commits TRIGGER, how much of it lands, and how
     * much is thrown away. `attempted` = the guard let a pass launch;
     * `landed` = that pass committed a merge; `lostRace` = the pass did
     * the full merge work and then lost the swap to a rival maintenance
-    * commit (wasted cluster work — the cost class the receipt watches);
+    * commit (wasted cluster work — the cost the intent marker prices out);
     * `skippedInFlight` = a committer found this JVM already maintaining
     * the table and moved on (the cheap outcome). JVM-lifetime counters;
     * [[resetAutoCompactStats]] zeroes them for a measurement window.

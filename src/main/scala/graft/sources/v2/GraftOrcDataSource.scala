@@ -1130,9 +1130,10 @@ case class GraftOrcInputPartition(filePath: String, start: Long, length: Long,
 /** Several SMALL files as ONE task: the packed analogue of Spark's own
   * `FilePartition` bin packing. At lake scale a table is mostly many
   * small-ish files (streaming ingest, partitioned writes), and one task
-  * per file pays scheduler latency + reader open cost per FILE — the
-  * neardup ScaleStress receipt measured a history join going 2.4 -> 15 s
-  * purely on file count. Every per-file concern (schema-version
+  * per file pays scheduler latency + reader open cost per FILE — a
+  * near-dup ingest's history join was measured going 2.4 -> 15 s purely
+  * on file count (GraftOrcSourceSpec pins the packing). Every per-file
+  * concern (schema-version
   * resolution, MoR sidecars, corrupt-file tolerance, per-file metrics)
   * is untouched: the factory chains the ordinary per-file readers.
   * `partitionKey` delegates to the first file — the planner only builds

@@ -74,8 +74,8 @@ object IngestDedup {
     *   GraftOrcMergePruneSpec). Pair with
     *   `TBLPROPERTIES('graft.compact_after'='N',
     *   'graft.compact_zorder'='fp')` and the MERGE commits keep the
-    *   clean table fp-sorted and file-count-bounded themselves — the
-    *   steady state of the streamingest receipt without a scheduler.
+    *   clean table fp-sorted and file-count-bounded themselves, without
+    *   a scheduler (GraftOrcStreamIngestSpec pins it).
     *   Add `'graft.distribution_mode'='hash'` so each MERGE writes ~one
     *   file per bucket dir instead of tasks x dirs — far less
     *   small-file creation for that maintenance to absorb.
@@ -84,8 +84,7 @@ object IngestDedup {
              checkpoint: String,
              fingerprint: Column = md5Key60(col("text")),
              maxFilesPerTrigger: Option[Int] = None,
-             buckets: Option[Int] = None,
-             onMerge: DataFrame => Unit = _ => ()): Unit = {
+             buckets: Option[Int] = None): Unit = {
     val reader = spark.readStream.format("graft-orc")
       .option("graft.snapshot_offsets", "true")
     maxFilesPerTrigger.foreach(n =>
@@ -96,8 +95,7 @@ object IngestDedup {
     val q = crawl.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, cleanTable, fingerprint, payloadCols, buckets,
-          onMerge)
+        mergeBatch(batch, cleanTable, fingerprint, payloadCols, buckets)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -114,8 +112,8 @@ object IngestDedup {
     */
   /** @param onMerge observation hook invoked with each executed MERGE
     *   statement's result frame (its executedPlan carries the target
-    *   scan's metrics — the ScaleStress streamingest receipt reads
-    *   `graftFilesRead` off it). Must not re-execute the frame.
+    *   scan's metrics — GraftOrcMergePruneSpec reads `graftFilesRead`
+    *   off it). Must not re-execute the frame.
     */
   def mergeBatch(batch: DataFrame, cleanTable: String,
                  fingerprint: Column, payloadCols: Seq[String],

@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions._
   * candidate join is the signature table RESTRICTED to the batch's
   * key-bucket set (`kb = pmod(hash(key), n)` identity-partition column;
   * the static `kb IN (...)` filter is an ordinary pushed predicate, so
-  * the scan prunes to the batch's buckets — same receipt family as the
-  * streamingest ScaleStress mode) and streams PAST the broadcast batch
-  * side — history is scanned once per batch and never shuffled. Both
+  * the scan prunes to the batch's buckets, as [[IngestDedup]]'s bucketed
+  * MERGE does — GraftOrcMergePruneSpec) and streams PAST the broadcast
+  * batch side — history is scanned once per batch and never shuffled. Both
   * MERGEs carry the static bucket predicate in their ON clause (MoR
   * MERGEs get no runtime group filtering — GraftOrcMergePruneSpec)
   * PLUS a static `t.doc_id >= min(batch doc_id)` lower bound: it is
@@ -49,11 +49,10 @@ import org.apache.spark.sql.functions._
   * the ascending-id crawl contract min/max file statistics prune the
   * ENTIRE history from both MERGE target scans — the MERGEs are
   * O(batch), not O(history), and only the one decision-join scan pays
-  * for corpus awareness (the ScaleStress `neardup` receipt measures
-  * exactly this split). Driver collects are bounded by the bucket
-  * count, never by data. Signature history grows with the corpus;
-  * key-sorted compaction keeps per-bucket file counts flat exactly as
-  * the streamingest receipt shows — and with
+  * for corpus awareness (GraftOrcMergePruneSpec pins exactly this
+  * split). Driver collects are bounded by the bucket count, never by
+  * data. Signature history grows with the corpus; key-sorted
+  * compaction keeps per-bucket file counts flat — and with
   * `TBLPROPERTIES('graft.compact_after'='N',
   * 'graft.compact_zorder'='key')` on the signature table the ingest
   * MERGE commits run that maintenance THEMSELVES
@@ -90,7 +89,7 @@ object NearDupIngest {
     * granularity the ids really do arrive out of order, and first-wins
     * decisions inside the wave would drift exactly the way the guard
     * exists to catch. Either deliver id-sorted files (sortWithinPartitions
-    * on doc_id before the crawl append — what the receipts do), drop
+    * on doc_id before the crawl append), drop
     * `maxFilesPerTrigger` so the wave lands as one batch, or accept
     * delivery-order semantics explicitly with `failOnOutOfOrder=false`.
     *
@@ -110,12 +109,12 @@ object NearDupIngest {
     * below the mark (full reordering — thrown or warned per
     * `failOnOutOfOrder`). The healthy-path zero-cost claim is exactly
     * "`fired` stays 0 on an ascending stream" — the per-round bench
-    * stamps these into its detail context and the ScaleStress neardup
-    * receipts assert them, so a refactor that accidentally puts the
-    * probe on the hot path (e.g. evaluating `seen` eagerly or widening
-    * the at-or-below test) shows up in the artifact, not just in a
-    * latency drift. JVM-lifetime counters; [[resetHwmProbeStats]]
-    * zeroes them for a measurement window.
+    * stamps these into its detail context and GraftOrcStreamIngestSpec
+    * asserts them, so a refactor that accidentally puts the probe on
+    * the hot path (e.g. evaluating `seen` eagerly or widening the
+    * at-or-below test) fails a test, not just a latency drift.
+    * JVM-lifetime counters; [[resetHwmProbeStats]] zeroes them for a
+    * measurement window.
     */
   private val probeFired = new java.util.concurrent.atomic.AtomicLong()
   private val probeRefused = new java.util.concurrent.atomic.AtomicLong()
@@ -124,17 +123,6 @@ object NearDupIngest {
     "fired" -> probeFired.get(), "refused" -> probeRefused.get())
 
   def resetHwmProbeStats(): Unit = { probeFired.set(0L); probeRefused.set(0L) }
-
-  /** Default phase hook: a stderr receipt line per phase when
-    * `SPARK_GRAFT_PHASE_LOG` is set (guide §1.1 measurement aid for the
-    * bench-declared ingest, whose caller passes no hook); no-op
-    * otherwise.
-    */
-  private[graft] val defaultPhaseLog: (String, Double) => Unit =
-    if (sys.env.contains("SPARK_GRAFT_PHASE_LOG"))
-      (n, s) => System.err.println(
-        f"[neardup-phase] $n%-12s ${s}%8.3f s")
-    else (_, _) => ()
 
   /** Key-bucket column over `key`. */
   def keyBucket(n: Int) = pmod(hash(col("key")), lit(n)).cast("int")
@@ -159,7 +147,6 @@ object NearDupIngest {
              bandKeys: DataFrame => DataFrame =
                graft.operators.Dedup.detBandKeys,
              maxFilesPerTrigger: Option[Int] = None,
-             onPhase: (String, Double) => Unit = defaultPhaseLog,
              onMerge: (String, DataFrame) => Unit = (_, _) => (),
              failOnOutOfOrder: Boolean = true): Unit = {
     val reader = spark.readStream.format("graft-orc")
@@ -169,16 +156,14 @@ object NearDupIngest {
     val crawl = reader.load(crawlDir)
     val payloadCols = crawl.columns.filterNot(c =>
       c.equalsIgnoreCase("doc_id") || c.equalsIgnoreCase("text")).toSeq
-    val tIngest = System.nanoTime()
     val q = crawl.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mergeBatch(batch, cleanTable, sigTable, payloadCols, buckets,
-          bandKeys, onPhase, onMerge, failOnOutOfOrder)
+          bandKeys, onMerge, failOnOutOfOrder)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    defaultPhaseLog("ingest_total", (System.nanoTime() - tIngest) / 1e9)
     q.exception.foreach(throw _)
   }
 
@@ -188,17 +173,13 @@ object NearDupIngest {
     * table. Both MERGEs are insert-only and keyed, hence replay no-ops.
     * Exposed for the decision-semantics specs (injectable banding).
     */
-  /** @param onPhase observation hook `(phase, seconds)` for the batch's
-    *   four timed phases (`band`, `decide`, `merge_clean`, `merge_sig`)
-    *   — the ScaleStress neardup receipt reads these.
-    * @param onMerge observation hook invoked with each executed MERGE's
+  /** @param onMerge observation hook invoked with each executed MERGE's
     *   result frame (its executedPlan carries the target scan's metrics,
     *   e.g. `graftFilesRead`). Must not re-execute the frame.
     */
   def mergeBatch(batch: DataFrame, cleanTable: String, sigTable: String,
                  payloadCols: Seq[String], buckets: Int,
                  bandKeys: DataFrame => DataFrame,
-                 onPhase: (String, Double) => Unit = (_, _) => (),
                  onMerge: (String, DataFrame) => Unit = (_, _) => (),
                  failOnOutOfOrder: Boolean = true)
       : Unit = {
@@ -207,12 +188,6 @@ object NearDupIngest {
     // bounds aggregate below subsumes the scan and an empty batch exits
     // through its null min/max before anything commits
     val s = batch.sparkSession
-    var t0 = System.nanoTime()
-    def phase(name: String): Unit = {
-      val t1 = System.nanoTime()
-      onPhase(name, (t1 - t0) / 1e9)
-      t0 = t1
-    }
     // crawl may re-deliver a doc_id inside one batch (at-least-once
     // upstream); collapse to one deterministic row per id
     val docs = batch
@@ -248,9 +223,6 @@ object NearDupIngest {
         .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
       .withColumn("kb", keyBucket(buckets))
       .localCheckpoint(true)
-    // sub-segment receipt (stderr-only, never the hook: ScaleStress sums
-    // hook phases and an overlapping segment would double-count)
-    defaultPhaseLog("band_ckpt", (System.nanoTime() - t0) / 1e9)
     var kept: DataFrame = null
     try {
       // ONE bounded job over the PERSISTED batch + the checkpointed keys
@@ -339,7 +311,6 @@ object NearDupIngest {
       // collider machinery is skipped
       val kbs = stat.find(_.getInt(0) == 1).get
         .getSeq[Int](3).sorted // bounded by `buckets`
-      phase("band")
       // colliders: every batch doc with a strictly-smaller-id band-key
       // sharer, in history (signature table pruned to the batch's
       // buckets — static pushed predicate) or in this batch (a dropped
@@ -365,7 +336,6 @@ object NearDupIngest {
       locally {
         val dbs = kept.groupBy().agg(collect_set(col("db"))).head()
           .getSeq[Int](0).sorted
-        phase("decide")
         // both MERGEs carry `t.doc_id >= minId` — implied by the match
         // condition (t.doc_id = b.doc_id), so results are IDENTICAL; as
         // a STATIC predicate it reaches the target scan and, under the
@@ -382,9 +352,8 @@ object NearDupIngest {
         // was already tolerated (replay MERGEs are keyed insert-only
         // no-ops), and a one-failed/one-landed overlap replays the same
         // way; the high-water mark still advances only after BOTH.
-        // onPhase/onMerge hooks fire from THIS thread after both
-        // complete (hook implementations stay single-threaded); each
-        // merge_* phase reports its own overlapped wall time.
+        // onMerge hooks fire from THIS thread after both complete (hook
+        // implementations stay single-threaded).
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
         // fresh thread per merge, created from THIS batch thread — not
@@ -399,12 +368,7 @@ object NearDupIngest {
             t.setDaemon(true)
             t.start()
           })
-        def timed[T](f: => T): (T, Double) = {
-          val t1 = System.nanoTime()
-          val r = f
-          (r, (System.nanoTime() - t1) / 1e9)
-        }
-        val cleanF = Future(timed {
+        val cleanF = Future {
           if (dbs.isEmpty) None
           else {
             val view = tempView(s, kept)
@@ -419,8 +383,8 @@ object NearDupIngest {
                  |""".stripMargin))
             finally s.catalog.dropTempView(view)
           }
-        })
-        val sigF = Future(timed {
+        }
+        val sigF = Future {
           if (kbs.isEmpty) None
           else {
             val kview = tempView(s, keys)
@@ -435,16 +399,13 @@ object NearDupIngest {
                  |""".stripMargin))
             finally s.catalog.dropTempView(kview)
           }
-        })
+        }
         // await BOTH before propagating either failure: a dangling
         // mid-commit future must not outlive this batch
         val cleanR = scala.util.Try(Await.result(cleanF, Duration.Inf))
         val sigR = scala.util.Try(Await.result(sigF, Duration.Inf))
-        t0 = System.nanoTime() // phases below start from merge completion
-        cleanR.foreach { case (df, secs) =>
-          df.foreach(onMerge("clean", _)); onPhase("merge_clean", secs) }
-        sigR.foreach { case (df, secs) =>
-          df.foreach(onMerge("sig", _)); onPhase("merge_sig", secs) }
+        cleanR.foreach(_.foreach(onMerge("clean", _)))
+        sigR.foreach(_.foreach(onMerge("sig", _)))
         cleanR.get; sigR.get
       }
       // advance the high-water mark AFTER both MERGEs committed: a
@@ -455,7 +416,6 @@ object NearDupIngest {
       if (hwm.forall(maxId > _))
         s.sql(s"ALTER TABLE $cleanTable SET TBLPROPERTIES(" +
           s"'$HwmProp'='$maxId')")
-      defaultPhaseLog("hwm_commit", (System.nanoTime() - t0) / 1e9)
     } finally {
       docs.unpersist()
       BatchFrames.dropLocalCheckpoint(keys)

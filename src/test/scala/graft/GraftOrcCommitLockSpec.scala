@@ -19,6 +19,7 @@ import graft.sources.v2.{GraftOrcManifest, OrcFileEntry}
   */
 class GraftOrcCommitLockSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  import TestSpark.withProps
 
   private def fsFor(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -26,15 +27,6 @@ class GraftOrcCommitLockSpec extends AnyFunSuite {
   private def mk(n: Int, qt: Path): Seq[OrcFileEntry] =
     (0 until n).map(i => OrcFileEntry(s"$qt/part-$i.snappy.orc",
       1000L + i, Map.empty, 1786692091502L + i))
-
-  private def withProps(props: (String, String)*)(body: => Unit): Unit = {
-    val saved = props.map { case (k, _) => k -> Option(System.getProperty(k)) }
-    props.foreach { case (k, v) => System.setProperty(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => System.setProperty(k, v)
-      case (k, None) => System.clearProperty(k)
-    }
-  }
 
   test("with the lock enabled a commit acquires and releases it; " +
     "without the property no lock file is ever created") {

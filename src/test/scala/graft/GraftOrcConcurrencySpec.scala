@@ -12,10 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan for, and whatever the interleaving, the final state equals the
   * serial application of the operations that reported success.
   *
-  * The heavier sweep (more rounds, bigger batches) runs as
-  * `scripts/run.sh graft.ScaleStress <sf> concurrent` and its receipt
-  * lives in BASELINE.md; this spec pins the contract in CI at a size
-  * that keeps the suite fast.
+  * The committers live in [[ConcurrentCommitters]]; this spec pins the
+  * contract in CI at a size that keeps the suite fast. The in-JVM race of
+  * appends against auto and explicit compaction under the file commit
+  * lock is pinned by GraftOrcCompactSpec.
   */
 class GraftOrcConcurrencySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -24,7 +24,7 @@ class GraftOrcConcurrencySpec extends AnyFunSuite {
     "commit lands exactly once or throws; final state equals the " +
     "serial oracle of the successes") {
     val dir = Files.createTempDirectory("graft-conc").toString + "/t"
-    val res = ScaleStress.concurrentCommitters(spark, dir,
+    val res = ConcurrentCommitters.concurrentCommitters(spark, dir,
       appenders = 3, rounds = 3)
     assert(res.ok,
       s"diverged: $res")

@@ -21,6 +21,18 @@ object TestSpark {
 
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** Runs `body` with the given JVM system properties set, restoring
+    * their previous values (or absence) afterwards.
+    */
+  def withProps(props: (String, String)*)(body: => Unit): Unit = {
+    val saved = props.map { case (k, _) => k -> Option(System.getProperty(k)) }
+    props.foreach { case (k, v) => System.setProperty(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => System.setProperty(k, v)
+      case (k, None) => System.clearProperty(k)
+    }
+  }
+
   def resource(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
 
