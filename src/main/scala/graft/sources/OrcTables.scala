@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.orc.GraftOrcShims
 import org.apache.spark.sql.types.StructType
+
+import graft.sources.v2.GraftOrcFileIndex
 
 /** ORC read/write layer — the Spark-native equivalent of the reference
   * connector's registration + options surface.
@@ -14,12 +18,13 @@ import org.apache.spark.sql.types.StructType
   *  - A14 writer (reference stub only, `src/writer.rs:18-23`) — implemented
   *    here via Spark's built-in OrcOutputWriter.
   *
-  * Design note: Spark's built-in vectorized ORC source already satisfies the
-  * reference's observable contracts (stripe-level "inexact" pushdown with a
-  * residual FilterExec above the scan, column pruning via requestedColumnIds,
-  * limit short-circuit). This layer therefore translates the reference's
-  * option/registration semantics onto that source instead of re-implementing
-  * a DSv2 connector — idiomatic, codegen'd, and faster.
+  * Design note: plain reads with no per-scan option stay on Spark's
+  * built-in vectorized ORC source, which already meets the reference's
+  * observable scan contracts (stripe-level "inexact" pushdown with a
+  * residual FilterExec above the scan, column pruning, limit
+  * short-circuit). Reads carrying a per-scan option route through the
+  * graft-orc DSv2 connector ([[read]]), whose schema inference is the
+  * driver-side footer merge of [[inferSchema]].
   */
 object OrcTables {
 
@@ -64,8 +69,7 @@ object OrcTables {
   /** A configured reader over the built-in source (no per-scan option
     * semantics — see [[read]] for option routing).
     */
-  def reader(spark: SparkSession, o: OrcReadOptions = OrcReadOptions(),
-             explicitKeys: Set[String] = Set.empty): DataFrameReader = {
+  def reader(spark: SparkSession, o: OrcReadOptions = OrcReadOptions()): DataFrameReader = {
     val r = spark.read.format("orc")
     if (o.mergeSchema) r.option("mergeSchema", "true") else r
   }
@@ -90,28 +94,45 @@ object OrcTables {
       val r = spark.read.format("graft-orc")
       opts.foreach { case (k, v) => r.option(k, v) }
       r.load(path)
-    } else reader(spark, o, opts.keySet).load(path)
+    } else reader(spark, o).load(path)
   }
 
   /** Schema inference without reading data — footer-only, like
-    * `read_orc_schema` (src/metadata.rs:35-58). Multi-file dirs merge
-    * schemas (conflict => AnalysisException, mirroring
+    * `read_orc_schema` (src/metadata.rs:35-58): the footers of `files`
+    * are read on the driver through the bounded metadata pool (reference
+    * src/file_format.rs:137-162) — never a Spark job — and merged in the
+    * given order (conflict => error naming both schemas, mirroring
     * Schema::try_merge error semantics at src/file_format.rs:157-161).
+    * With `ignoreCorrupt`, unreadable footers are left out of the merge;
+    * if no footer remains, inference fails as the built-in source's does.
     */
-  def inferSchema(spark: SparkSession, path: String): StructType =
-    inferSchema(spark, Seq(path))
-
-  /** Multi-path variant: schemas merge across every path's files. With
-    * `ignoreCorrupt`, unreadable footers are skipped during the merge
-    * (forwarded to the built-in source's per-relation option) instead of
-    * failing inference.
-    */
-  def inferSchema(spark: SparkSession, paths: Seq[String],
-                  ignoreCorrupt: Boolean = false): StructType = {
-    val r = reader(spark, OrcReadOptions(mergeSchema = true))
-    (if (ignoreCorrupt) r.option("ignoreCorruptFiles", "true") else r)
-      .load(paths: _*).schema
+  def mergeFooterSchemas(spark: SparkSession, files: Seq[String],
+                         ignoreCorrupt: Boolean): StructType = {
+    val conf = GraftOrcShims.hadoopConf(spark)
+    val footers = GraftOrcFileIndex.parallelMap(files, MetaParallelism) { f =>
+      GraftOrcShims.footerSchema(new Path(f), conf, ignoreCorrupt)
+    }
+    GraftOrcShims.mergeSchemas(footers.flatten,
+      GraftOrcShims.caseSensitiveAnalysis(spark))
+      .getOrElse(throw GraftOrcShims.unableToInferSchema)
   }
+
+  /** A listed table's schema: the merged footers of its files, in listing
+    * order, followed by a hive layout's `k=v` columns typed from the
+    * listed directories ([[GraftOrcFileIndex.partitionSchema]]).
+    */
+  def inferSchema(spark: SparkSession, index: GraftOrcFileIndex,
+                  ignoreCorrupt: Boolean): StructType = {
+    val data = mergeFooterSchemas(spark, index.entries.map(_.path), ignoreCorrupt)
+    if (index.partitionColumnNames.isEmpty) data
+    else GraftOrcShims.mergeDataAndPartitionSchema(data,
+      index.partitionSchema(spark), GraftOrcShims.caseSensitiveAnalysis(spark))
+  }
+
+  /** Concurrent footer reads on the driver (reference
+    * `meta_fetch_concurrency`: src/file_format.rs:146-155).
+    */
+  private val MetaParallelism = 32
 
   /** Register every `<name>.orc` file/dir under `dir` as a temp view —
     * the analogue of ListingTable registration

@@ -86,13 +86,11 @@ class GraftOrcDataSource extends TableProvider with DataSourceRegister {
     // resolves the ADDRESSED snapshot's schema.
     index.tableMeta.foreach(m => return m.schema)
     if (index.entries.isEmpty) return new StructType()
-    // A2: merge schemas across ALL paths/files (conflict => AnalysisException).
-    // Hive layouts infer through the ROOT paths so Spark's partition-type
-    // discovery appends the k=v columns; everything else infers from the
-    // recursively-indexed FILES — Spark's own root listing is not
-    // recursive, so a plain nested layout (e.g. wave subdirectories under
-    // a streamed table) would otherwise fail inference on files this
-    // connector can read.
+    // A2: merge the footers of every listed file on the driver (conflict
+    // => error naming both schemas); hive layouts append their k=v
+    // columns. The recursive index is the listing, so a plain nested
+    // layout (e.g. wave subdirectories under a streamed table) infers from
+    // every file this connector reads.
     // ignoreCorruptFiles applies to inference too: a truncated upload
     // must not block reading the rest of the table (option first, session
     // conf spark.sql.files.ignoreCorruptFiles as the default)
@@ -100,11 +98,7 @@ class GraftOrcDataSource extends TableProvider with DataSourceRegister {
       .map(GraftOrcDataSource.parseBooleanOption("ignoreCorruptFiles", _))
       .getOrElse(
         spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false").toBoolean)
-    if (index.partitionColumnNames.nonEmpty)
-      graft.sources.OrcTables.inferSchema(spark, ps, ignoreCorrupt)
-    else
-      graft.sources.OrcTables.inferSchema(spark, index.entries.map(_.path),
-        ignoreCorrupt)
+    graft.sources.OrcTables.inferSchema(spark, index, ignoreCorrupt)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -1074,7 +1068,7 @@ class GraftOrcAggReaderFactory(dataFileSchema: StructType,
               GraftOrcDataSource.notePlanFooterRead(ap.filePath)
               // footer-only open: the metadata hint keeps this to ONE
               // ranged read per file on object stores
-              val (reader, _) = GraftOrcTailReader.createReader(
+              val (reader, _, _) = GraftOrcTailReader.createReader(
                 new Path(ap.filePath), conf.value, ap.fileLength,
                 metadataSizeHint)
               val partValues = new GenericInternalRow(
@@ -2419,7 +2413,7 @@ class GraftOrcPartitionReaderFactory(dataFileSchema: StructType,
     // orc.metadata_size_hint: one ranged tail read of the hinted size
     // replaces the reader's own footer fetch; a too-small hint costs a
     // second fetch, surfaced in the ioRequests metric
-    val (orcReader, metaReads) = GraftOrcTailReader.createReader(
+    val (orcReader, orcTail, metaReads) = GraftOrcTailReader.createReader(
       filePath, conf, p.fileLength, metadataSizeHint)
     ioRequests += metaReads - 1
     val (colIds, canPrune) =
@@ -2547,7 +2541,8 @@ class GraftOrcPartitionReaderFactory(dataFileSchema: StructType,
     val ctx = new TaskAttemptContextImpl(conf, attemptId)
     val split = new FileSplit(filePath, p.start, p.length, Array.empty[String])
     val reader = new OrcColumnarBatchReader(batchSize, MemoryMode.ON_HEAP)
-    reader.initialize(split, ctx)
+    // the tail parsed above: the batch reader opens no footer of its own
+    reader.initialize(split, ctx, orcTail)
     val partColIds = Array.fill(readDataSchema.length)(-1) ++
       constSchema.indices.toArray
     defaultSlots.zipWithIndex.foreach { case ((i, _), k) =>

@@ -6,6 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.orc.GraftOrcShims
+import org.apache.spark.sql.types.StructType
 
 /** One discovered ORC data file. `partitionValues` holds the raw (unescaped)
   * hive-layout `k=v` values found on the file's directory path, in path
@@ -245,6 +248,23 @@ class GraftOrcFileIndex(conf: Configuration, roots: Seq[String],
   lazy val partitionColumnNames: Seq[String] =
     if (entries.isEmpty) Nil
     else entries.map(_.partitionValues.keys.toSeq).maxBy(_.length)
+
+  /** Typed partition columns of a hive layout, from the listed files'
+    * directories alone (Spark's path-based partition typing, the roots as
+    * base paths — a file root stops at its parent, as in Spark's file
+    * index), so no second listing and no Spark job. Empty when no file
+    * sits under a `k=v` directory.
+    */
+  def partitionSchema(spark: SparkSession): StructType = {
+    val bases = roots.map { r =>
+      val p = new Path(r)
+      val fs = p.getFileSystem(conf)
+      val q = fs.makeQualified(p)
+      if (fs.getFileStatus(q).isDirectory) q else q.getParent
+    }.toSet
+    GraftOrcShims.partitionSchema(spark,
+      entries.map(e => new Path(e.path).getParent).distinct, bases)
+  }
 }
 
 object GraftOrcFileIndex {

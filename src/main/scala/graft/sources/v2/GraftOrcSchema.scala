@@ -510,10 +510,7 @@ object GraftOrcSchema {
     val index = new GraftOrcFileIndex(conf, Seq(table), 32)
     val schema =
       if (index.entries.isEmpty) new StructType()
-      else if (index.partitionColumnNames.nonEmpty)
-        graft.sources.OrcTables.inferSchema(spark, Seq(table), false)
-      else graft.sources.OrcTables.inferSchema(
-        spark, index.entries.map(_.path), false)
+      else graft.sources.OrcTables.inferSchema(spark, index, ignoreCorrupt = false)
     require(schema.nonEmpty,
       s"graft-orc: cannot bootstrap schema metadata for EMPTY table " +
         s"$table — write data first, or create it through the catalog")

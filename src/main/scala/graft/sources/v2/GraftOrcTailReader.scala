@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.orc.{OrcFile, Reader}
-import org.apache.orc.impl.ReaderImpl
+import org.apache.orc.impl.{OrcTail, ReaderImpl}
 import org.slf4j.LoggerFactory
 
 /** Honors `orc.metadata_size_hint` (reference src/options.rs:36, 88-90):
@@ -27,12 +27,24 @@ object GraftOrcTailReader {
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** (reader, rangedMetadataReads): 1 when the hint covered the tail (or
-    * no hint was given — the reader's own footer read), 2 when the hinted
-    * read was insufficient and the reader re-fetched.
+  /** (reader, tail, rangedMetadataReads). `tail` is the parsed
+    * postscript+footer the reader was opened on; hand it to the split's
+    * batch reader so the footer is read once per split. The count is 1
+    * when the hint covered the tail (or no hint was given — the reader's
+    * own footer read), 2 when the hinted read was insufficient and the
+    * reader re-fetched.
     */
   def createReader(path: Path, conf: Configuration, fileLength: Long,
-                   metadataSizeHint: Option[Long]): (Reader, Int) =
+                   metadataSizeHint: Option[Long]): (Reader, OrcTail, Int) = {
+    val (opts, reads) = openOptions(path, conf, fileLength, metadataSizeHint)
+    // ReaderImpl stores the tail it parsed (or was given) in its options
+    val reader = OrcFile.createReader(path, opts)
+    (reader, opts.getOrcTail, reads)
+  }
+
+  private def openOptions(path: Path, conf: Configuration, fileLength: Long,
+                          metadataSizeHint: Option[Long])
+      : (OrcFile.ReaderOptions, Int) =
     metadataSizeHint match {
       case Some(hint) if hint > 0 && fileLength > 0 =>
         val fs = path.getFileSystem(conf)
@@ -55,14 +67,9 @@ object GraftOrcTailReader {
             None
           }
         tail match {
-          case Some(t) =>
-            (OrcFile.createReader(path,
-              OrcFile.readerOptions(conf).filesystem(fs).orcTail(t)), 1)
-          case None =>
-            (OrcFile.createReader(path,
-              OrcFile.readerOptions(conf).filesystem(fs)), 2)
+          case Some(t) => (OrcFile.readerOptions(conf).filesystem(fs).orcTail(t), 1)
+          case None => (OrcFile.readerOptions(conf).filesystem(fs), 2)
         }
-      case _ =>
-        (OrcFile.createReader(path, OrcFile.readerOptions(conf)), 1)
+      case _ => (OrcFile.readerOptions(conf), 1)
     }
 }

@@ -510,7 +510,8 @@ object GraftOrcWrite {
         identityCols(f.name.toLowerCase)))).getOrElse {
       val sample =
         (existing.take(4) ++ existing.takeRight(4)).map(_.path).distinct
-      graft.sources.OrcTables.inferSchema(spark, sample)
+      graft.sources.OrcTables.mergeFooterSchemas(spark, sample,
+        ignoreCorrupt = false)
     }
     val wantByName = fileSchema.fields
       .map(f => f.name.toLowerCase -> f.dataType).toMap

@@ -1,16 +1,19 @@
 package org.apache.spark.sql.execution.datasources.orc
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.hive.ql.io.sarg.SearchArgument
 import org.apache.orc.TypeDescription
+import org.apache.spark.SparkException
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.errors.{QueryCompilationErrors, QueryExecutionErrors}
+import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitioningUtils}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /** Access to the `private[sql]` ORC helpers the graft-orc DSv2 connector
-  * reuses (filter -> SearchArgument compilation and column-id mapping) —
-  * the same seam Spark's own v2 ORC source uses.
+  * reuses (filter -> SearchArgument compilation, column-id mapping and
+  * footer schema inference) — the same seam Spark's own v2 ORC source uses.
   */
 object GraftOrcShims {
 
@@ -85,6 +88,66 @@ object GraftOrcShims {
     val factory = new OrcFileFormat().prepareWrite(spark, job, options, dataSchema)
     (factory, job.getConfiguration)
   }
+
+  /** Session Hadoop configuration (`spark.hadoop.*` and session confs
+    * applied), the conf Spark's own schema inference reads footers with.
+    */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.sessionState.newHadoopConf()
+
+  def caseSensitiveAnalysis(spark: SparkSession): Boolean =
+    spark.sessionState.conf.caseSensitiveAnalysis
+
+  /** One file's data schema from its footer, converted exactly as the
+    * built-in ORC source converts it. None for a footer with no fields,
+    * and for an unreadable footer under `ignoreCorrupt` (otherwise that
+    * fails naming the file).
+    */
+  def footerSchema(file: Path, conf: Configuration,
+                   ignoreCorrupt: Boolean): Option[StructType] =
+    OrcUtils.readSchema(file, conf, ignoreCorrupt).map(OrcUtils.toCatalystSchema)
+
+  /** Merge per-file schemas left to right, wrapping a conflict as
+    * `SchemaMergeUtils.mergeSchemasInParallel` does (the error names both
+    * schemas). None when there is nothing to merge.
+    */
+  def mergeSchemas(schemas: Seq[StructType],
+                   caseSensitive: Boolean): Option[StructType] =
+    schemas.reduceLeftOption { (merged, next) =>
+      try merged.merge(next, caseSensitive)
+      catch {
+        case cause: SparkException =>
+          throw QueryExecutionErrors.failedMergingSchemaError(merged, next, cause)
+      }
+    }
+
+  /** Partition columns of a hive `k=v` layout, typed as Spark's own file
+    * index types them (session type inference, case sensitivity,
+    * validation, time zone and invalid-path settings): `leafDirs` are the
+    * directories holding data files, `basePaths` stop the walk up each
+    * one. Pure path parsing — no listing and no Spark job.
+    */
+  def partitionSchema(spark: SparkSession, leafDirs: Seq[Path],
+                      basePaths: Set[Path]): StructType = {
+    val conf = spark.sessionState.conf
+    PartitioningUtils.parsePartitions(leafDirs,
+      conf.partitionColumnTypeInferenceEnabled, basePaths, None,
+      conf.caseSensitiveAnalysis, conf.validatePartitionColumns,
+      conf.sessionLocalTimeZone, conf.ignoreInvalidPartitionPaths)
+      .partitionColumns
+  }
+
+  /** Place partition columns after the data columns; a partition column
+    * the data files also carry keeps its data position and takes the
+    * partition type (the built-in file source's relation schema).
+    */
+  def mergeDataAndPartitionSchema(data: StructType, partitions: StructType,
+                                  caseSensitive: Boolean): StructType =
+    PartitioningUtils.mergeDataAndPartitionSchema(data, partitions, caseSensitive)._1
+
+  /** The error the built-in ORC source raises when no file yields a schema. */
+  def unableToInferSchema: Throwable =
+    QueryCompilationErrors.dataSchemaNotSpecifiedError("ORC")
 
   /** Result schema string for the ORC reader conf (also sets the conf key). */
   def orcResultSchemaString(

@@ -101,9 +101,18 @@ class OrcTablesSpec extends AnyFunSuite {
       org.apache.orc.OrcFile.readerOptions(conf))
     val expectRows = try plain.getNumberOfRows finally plain.close()
 
+    // no hint: the reader's own footer read, and the tail it parsed comes
+    // back for the split's batch reader (no second footer read per split)
+    val (r0, t0, reads0) = graft.sources.v2.GraftOrcTailReader.createReader(
+      f, conf, len, None)
+    try {
+      assert(reads0 === 1)
+      assert(t0 != null && t0.getFooter.getNumberOfRows === expectRows)
+    } finally r0.close()
+
     // generous hint: the pre-parsed tail is handed to the reader — exactly
     // one ranged metadata read, and the reader agrees with the plain path
-    val (r1, reads1) = graft.sources.v2.GraftOrcTailReader.createReader(
+    val (r1, _, reads1) = graft.sources.v2.GraftOrcTailReader.createReader(
       f, conf, len, Some(64 * 1024))
     try {
       assert(reads1 === 1)
@@ -113,7 +122,7 @@ class OrcTablesSpec extends AnyFunSuite {
 
     // 8-byte hint cannot hold any postscript: the hinted read is wasted
     // and the reader re-fetches — observable as the second metadata read
-    val (r2, reads2) = graft.sources.v2.GraftOrcTailReader.createReader(
+    val (r2, _, reads2) = graft.sources.v2.GraftOrcTailReader.createReader(
       f, conf, len, Some(8))
     try {
       assert(reads2 === 2)
@@ -121,7 +130,7 @@ class OrcTablesSpec extends AnyFunSuite {
     } finally r2.close()
 
     // hint larger than the file is capped, not an error
-    val (r3, reads3) = graft.sources.v2.GraftOrcTailReader.createReader(
+    val (r3, _, reads3) = graft.sources.v2.GraftOrcTailReader.createReader(
       f, conf, len, Some(len * 100))
     try { assert(reads3 === 1); assert(r3.getNumberOfRows === expectRows) }
     finally r3.close()
