@@ -14,12 +14,19 @@ import graft.operators._
   */
 object SparkEntry {
 
-  private val modules: Seq[QueryDef] =
+  private[graft] val modules: Seq[QueryDef] =
     Relational.defs ++ TpcdsShapes.defs ++ TpcdsShapes2.defs ++
       TpcdsShapes3.defs ++
       TextAnalysis.defs ++ Dedup.defs ++
       Similarity.defs ++ Multimodal.defs ++ TypedOps.defs ++
       Pipeline.defs ++ RowLevelOps.defs ++ CatalogOps.defs
+
+  // `queries` is a Map: a second definition under one name would
+  // silently replace the first
+  require(modules.map(_.name).distinct.size == modules.size,
+    "duplicated query names: " + modules.groupBy(_.name)
+      .collect { case (n, qs) if qs.size > 1 => n }.toSeq.sorted
+      .mkString(", "))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Star join + aggregate + ordering over the ORC round-trip scan path —

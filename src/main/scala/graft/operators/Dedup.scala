@@ -127,15 +127,30 @@ object Dedup {
 
   private def gated(df: DataFrame): DataFrame = Joins.sizeGatedBroadcast(df)
 
-  /** Banded LSH candidate pairs (a_id < b_id), deduplicated. */
-  def lshCandidates(sigs: DataFrame): DataFrame = {
-    val banded = lshBands(sigs, "doc_id", Bands, RowsPerBand)
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a_id"))
-    val r = banded.select(col("band"), col("key"), col("doc_id").as("b_id"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+  /** Blocked self-join, the candidate step of every near-dup path: each
+    * pair of `df` rows that agree on all `keys`, as `a_id < b_id` over the
+    * `id` column — an equi-join on the blocking keys, never a cross join;
+    * a pair sharing several keys appears once per key. Each `carry`
+    * (column, suffix) rides along as `a_<suffix>` / `b_<suffix>`.
+    */
+  private def blockedPairs(df: DataFrame, keys: Seq[String], id: String,
+                           carry: (String, String)*): DataFrame = {
+    def side(p: String) = df.select(keys.map(col) ++
+      (col(id).as(s"${p}_id") +:
+        carry.map { case (c, sfx) => col(c).as(s"${p}_$sfx") }): _*)
+    side("a").join(side("b"), keys).filter(col("a_id") < col("b_id"))
   }
+
+  /** Distinct (a_id, b_id) pairs sharing a band key of
+    * `banded(doc_id, band, key)`.
+    */
+  private def bandCandidates(banded: DataFrame): DataFrame =
+    blockedPairs(banded, Seq("band", "key"), "doc_id")
+      .select(col("a_id"), col("b_id")).distinct()
+
+  /** Banded LSH candidate pairs (a_id < b_id), deduplicated. */
+  def lshCandidates(sigs: DataFrame): DataFrame =
+    bandCandidates(lshBands(sigs, "doc_id", Bands, RowsPerBand))
 
   /** Exact word-set Jaccard attached to candidate pairs. The token-set
     * lookup sides broadcast while they fit (candidates never shuffle with
@@ -175,18 +190,6 @@ object Dedup {
       .filter(col("jac") >= minJac)
   }
 
-  /** The DETERMINISTIC twin of [[minhashNearDups]]: identical pipeline
-    * (3-word shingles -> per-permutation min-hash signature -> banded
-    * key join -> exact-Jaccard verification), but every hash is
-    * [[TextHashFunctions.md5Key60]] over an explicit string encoding —
-    * permutation p of shingle s hashes `"$p$s"`, a band's key
-    * hashes its comma-joined signature slice — so DuckDB reproduces the
-    * band assignment BIT-EXACTLY and the driver's full hash oracle
-    * covers the whole LSH path, not just its algebra. The engine path
-    * ([[minhashNearDups]], xxhash64 native expression) stays the one
-    * benched; this twin trades one md5 per (perm, shingle) for
-    * cross-engine reproducibility.
-    */
   /** The deterministic (md5-permuted) minhash BAND KEYS of each
     * document: one `(doc_id, band, key)` row per band, where `key` is
     * the md5Key60 of the band's signature slice — exactly the banding
@@ -229,35 +232,44 @@ object Dedup {
       }: _*)).as(Seq("band", "key")))
   }
 
-  def minhashNearDupsDet(docs: DataFrame, minJac: Double): DataFrame = {
-    val banded = detBandKeys(docs)
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a_id"))
-    val r = banded.select(col("band"), col("key"), col("doc_id").as("b_id"))
-    val cands = l.join(r, Seq("band", "key"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
-    withJaccard(cands, docsets(docs, md5Key60))
+  /** The DETERMINISTIC twin of [[minhashNearDups]]: identical pipeline
+    * (3-word shingles -> per-permutation min-hash signature -> banded
+    * key join -> exact-Jaccard verification), but every hash is
+    * [[TextHashFunctions.md5Key60]] over an explicit string encoding —
+    * permutation p of shingle s hashes `"$p$s"`, a band's key
+    * hashes its comma-joined signature slice — so DuckDB reproduces the
+    * band assignment BIT-EXACTLY and the full DuckDB hash oracle
+    * covers the whole LSH path, not just its algebra. The engine path
+    * ([[minhashNearDups]], xxhash64 native expression) stays the one
+    * benched; this twin trades one md5 per (perm, shingle) for
+    * cross-engine reproducibility.
+    */
+  def minhashNearDupsDet(docs: DataFrame, minJac: Double): DataFrame =
+    withJaccard(bandCandidates(detBandKeys(docs)), docsets(docs, md5Key60))
       .filter(col("jac") >= minJac)
       .select(col("a_id"), col("b_id"))
-  }
+
+  /** SimHash tail shared by both twins: pairs of
+    * `chunked(doc_id, <fp>, chunk, ckey)` sharing a fingerprint chunk,
+    * with the hamming distance of their `fp` fingerprints, kept within
+    * `maxHamming`.
+    */
+  private def chunkHammingPairs(chunked: DataFrame, fp: String,
+                                maxHamming: Int): DataFrame =
+    blockedPairs(chunked, Seq("chunk", "ckey"), "doc_id", fp -> "fp")
+      .select(col("a_id"), col("b_id"),
+        bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
 
   /** SimHash near-duplicate pairs within the given Hamming distance,
     * blocked by 16-bit fingerprint chunks (no cross join).
     */
   def simhashNearDups(docs: DataFrame, maxHamming: Int): DataFrame = {
     val sim = docs.select(col("doc_id"), simhash64(col("text")).as("simhash"))
-    val chunked = sim.select(col("doc_id"), col("simhash"),
-      posexplode(hammingChunks(col("simhash"), 4)).as(Seq("chunk", "ckey")))
-    val l = chunked.select(col("chunk"), col("ckey"),
-      col("doc_id").as("a_id"), col("simhash").as("a_sh"))
-    val r = chunked.select(col("chunk"), col("ckey"),
-      col("doc_id").as("b_id"), col("simhash").as("b_sh"))
-    l.join(r, Seq("chunk", "ckey"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("a_sh").bitwiseXOR(col("b_sh"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    chunkHammingPairs(sim.select(col("doc_id"), col("simhash"),
+        posexplode(hammingChunks(col("simhash"), 4)).as(Seq("chunk", "ckey"))),
+      "simhash", maxHamming)
   }
 
   /** The DETERMINISTIC twin of [[simhashNearDups]]: a 60-bit SimHash
@@ -281,19 +293,10 @@ object Dedup {
       .groupBy(col("doc_id")).agg(sum(expr(
         "CASE WHEN s > 0 THEN shiftleft(CAST(1 AS BIGINT), b) " +
           "ELSE CAST(0 AS BIGINT) END")).as("fp"))
-    val chunked = fp.selectExpr("doc_id", "fp",
-      "posexplode(transform(sequence(0, 3), " +
-        "c -> shiftright(fp, c * 15) & 32767)) AS (chunk, ckey)")
-    val l = chunked.select(col("chunk"), col("ckey"),
-      col("doc_id").as("a_id"), col("fp").as("a_fp"))
-    val r = chunked.select(col("chunk"), col("ckey"),
-      col("doc_id").as("b_id"), col("fp").as("b_fp"))
-    l.join(r, Seq("chunk", "ckey"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    chunkHammingPairs(fp.selectExpr("doc_id", "fp",
+        "posexplode(transform(sequence(0, 3), " +
+          "c -> shiftright(fp, c * 15) & 32767)) AS (chunk, ckey)"),
+      "fp", maxHamming)
   }
 
   /** Multi-table hyperplane-LSH embedding near-dup — the scale path
@@ -315,10 +318,7 @@ object Dedup {
     val bucketed = e.select(col("vec_id"),
       posexplode(VectorFunctions.hyperplaneBuckets(col("embedding"),
         tables, planesPerTable, 64)).as(Seq("table", "bucket")))
-    val l = bucketed.select(col("table"), col("bucket"), col("vec_id").as("a_id"))
-    val r = bucketed.select(col("table"), col("bucket"), col("vec_id").as("b_id"))
-    val cand = l.join(r, Seq("table", "bucket"))
-      .filter(col("a_id") < col("b_id"))
+    val cand = blockedPairs(bucketed, Seq("table", "bucket"), "vec_id")
       .select(col("a_id"), col("b_id")).distinct()
     // vector lookup sides are one row per vector — broadcast (so the much
     // larger candidate set never sorts/shuffles) ONLY while the vector
@@ -725,11 +725,7 @@ object Dedup {
             DetLsh.Tables, DetLsh.Planes).as("bks"))
         val long = banded.select(col("vec_id"),
           posexplode(col("bks")).as(Seq("t", "bucket")))
-        val a = long.select(col("t"), col("bucket"),
-          col("vec_id").as("a_id"))
-        val b = long.select(col("t"), col("bucket"),
-          col("vec_id").as("b_id"))
-        a.join(b, Seq("t", "bucket")).filter(col("a_id") < col("b_id"))
+        blockedPairs(long, Seq("t", "bucket"), "vec_id")
           .groupBy(col("a_id"), col("b_id"))
           .agg(count(lit(1)).as("n_shared"))
           .orderBy(col("a_id"), col("b_id"))
@@ -870,13 +866,8 @@ object Dedup {
                       k: Int = 16): DataFrame = {
     // centroid assignment = per-vector dot products against the
     // broadcast model, pre-shuffle — floor the scan parallelism
-    val assigned = semDedupAssign(Spread.spread(e, col("vec_id")), k)
-    val dropped = semDedupDropped(assigned, threshold)
-    assigned.join(dropped, assigned("vec_id") === dropped("d_id"), "left")
-      .groupBy(col("c_id"))
-      .agg(count(lit(1)).as("n_vectors"),
-        count(col("d_id")).as("n_dropped"))
-      .orderBy(col("c_id"))
+    clusterDropSummary(
+      semDedupAssign(Spread.spread(e, col("vec_id")), k), threshold)
   }
 
   /** Deterministic SemDeDup summary (dd_semdedup_det): grid-cell
@@ -890,9 +881,17 @@ object Dedup {
       val v = element_at(col("embedding"), i).cast("double")
       when(v < -0.1, 0).when(v < 0.1, 1).otherwise(2)
     }
-    val assigned = Spread.spread(e, col("vec_id"))
+    clusterDropSummary(Spread.spread(e, col("vec_id"))
       .select(col("vec_id"), col("embedding"),
-        (bin(1) * 3 + bin(2)).as("c_id"))
+        (bin(1) * 3 + bin(2)).as("c_id")), threshold)
+  }
+
+  /** SemDeDup tail shared by both twins: per cluster of
+    * `assigned(vec_id, c_id, embedding)`, its vector count and how many of
+    * them [[semDedupDropped]] drops.
+    */
+  private def clusterDropSummary(assigned: DataFrame,
+                                 threshold: Double): DataFrame = {
     val dropped = semDedupDropped(assigned, threshold)
     assigned.join(dropped, assigned("vec_id") === dropped("d_id"), "left")
       .groupBy(col("c_id"))
@@ -929,14 +928,8 @@ object Dedup {
     * threshold) in the SAME cluster — each drop keeps its lowest-id
     * witness, so one representative per duplicate relation survives.
     */
-  def semDedupDropped(assigned: DataFrame, threshold: Double): DataFrame = {
-    val a = assigned.select(col("c_id"), col("vec_id").as("a_id"),
-      col("embedding").as("a_v"))
-    val b = assigned.select(col("c_id"), col("vec_id").as("b_id"),
-      col("embedding").as("b_v"))
-    a.join(b, Seq("c_id"))
-      .filter(col("a_id") < col("b_id"))
+  def semDedupDropped(assigned: DataFrame, threshold: Double): DataFrame =
+    blockedPairs(assigned, Seq("c_id"), "vec_id", "embedding" -> "v")
       .filter(VectorFunctions.cosine(col("a_v"), col("b_v")) >= threshold)
       .select(col("b_id").as("d_id")).distinct()
-  }
 }

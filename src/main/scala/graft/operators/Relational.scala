@@ -25,6 +25,52 @@ object Relational {
   private val oDsum = (x: String, a: String) =>
     s"CAST(sum(CAST($x AS DECIMAL(18,2))) AS DOUBLE) AS $a"
 
+  /** Filterless global COUNT/MIN/MAX over `orders`, pushed down to the
+    * graft-orc footer/sidecar statistics of the table at `path`.
+    */
+  private def ordersFooterAgg(name: String,
+                              path: (SparkSession, String) => String)
+      : QueryDef =
+    QueryDef(name,
+      (s, d) => s.read.format("graft-orc")
+        .option("orc.aggregate_pushdown", "true").load(path(s, d))
+        .agg(count(lit(1)).as("n"),
+          min(col("o_orderkey")).as("min_key"),
+          max(col("o_orderkey")).as("max_key"),
+          min(col("o_custkey")).as("min_cust"),
+          max(col("o_custkey")).as("max_cust")),
+      Some("""SELECT count(*) AS n,
+             |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
+             |  min(o_custkey) AS min_cust, max(o_custkey) AS max_cust
+             |FROM orders""".stripMargin))
+
+  /** Star join of the l_returnflag-partitioned lineitem (loaded by
+    * `fact` from its ORC path) with the file-backed flag dim, filtered
+    * on a dim attribute so the fact's pruning can only happen at run time.
+    */
+  private def returnedStarJoin(name: String,
+                               fact: (SparkSession, String) => DataFrame)
+      : QueryDef =
+    QueryDef(name,
+      (s, d) => {
+        val f = fact(s,
+          OrcData.partitionedOrcPath(s, d, "lineitem", "l_returnflag"))
+        val dim = s.read.parquet(OrcData.flagDimPath(s, d))
+          .filter(col("status_name") === "returned")
+        f.join(broadcast(dim), col("l_returnflag") === col("flag"))
+          .groupBy(col("status_name"))
+          .agg(count(lit(1)).as("n"), dsum(col("l_quantity"), "sum_qty"))
+          .orderBy(col("status_name"))
+      },
+      Some(s"""SELECT status_name, count(*) AS n,
+              |  ${oDsum("l_quantity", "sum_qty")}
+              |FROM lineitem
+              |JOIN (VALUES ('R', 'returned'), ('A', 'acknowledged'),
+              |      ('N', 'in_flight')) d(flag, status_name)
+              |  ON l_returnflag = flag
+              |WHERE status_name = 'returned'
+              |GROUP BY 1 ORDER BY 1""".stripMargin))
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------- q01
@@ -459,21 +505,7 @@ object Relational {
     // footers (GraftOrcAggScan — one partial row per file, zero stripe
     // I/O; plan-asserted in GraftOrcAggPushdownSpec). At 100 TB this is a
     // metadata sweep instead of a full read.
-    QueryDef("q72_orc_agg_pushdown",
-      (s, d) => {
-        val path = OrcData.orcPath(s, d, "orders")
-        s.read.format("graft-orc")
-          .option("orc.aggregate_pushdown", "true").load(path)
-          .agg(count(lit(1)).as("n"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key"),
-            min(col("o_custkey")).as("min_cust"),
-            max(col("o_custkey")).as("max_cust"))
-      },
-      Some("""SELECT count(*) AS n,
-             |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
-             |  min(o_custkey) AS min_cust, max(o_custkey) AS max_cust
-             |FROM orders""".stripMargin)),
+    ordersFooterAgg("q72_orc_agg_pushdown", OrcData.orcPath(_, _, "orders")),
 
     // --------------------------------------------------------------- q103
     // Aggregate pushdown WITH GROUP BY partition columns: each file
@@ -503,21 +535,8 @@ object Relational {
     // at 100 TB this query touches NO data file at all (not even
     // footers; zero-open asserted in GraftOrcAggPushdownSpec). The
     // oracle runs the same aggregates over the source parquet.
-    QueryDef("q100_manifest_metadata_count",
-      (s, d) => {
-        val path = OrcData.manifestOrcPath(s, d, "orders", "o_orderkey")
-        s.read.format("graft-orc")
-          .option("orc.aggregate_pushdown", "true").load(path)
-          .agg(count(lit(1)).as("n"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key"),
-            min(col("o_custkey")).as("min_cust"),
-            max(col("o_custkey")).as("max_cust"))
-      },
-      Some("""SELECT count(*) AS n,
-             |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
-             |  min(o_custkey) AS min_cust, max(o_custkey) AS max_cust
-             |FROM orders""".stripMargin)),
+    ordersFooterAgg("q100_manifest_metadata_count",
+      OrcData.manifestOrcPath(_, _, "orders", "o_orderkey")),
 
     // --------------------------------------------------------------- q101
     // File-level statistics pruning on a manifest table: the pushed
@@ -1339,25 +1358,7 @@ object Relational {
     // every partition" into "scan the partitions the dim selects". The
     // file-backed dim (written once under the ORC cache root) is what
     // makes Spark's DPP benefit estimate fire.
-    QueryDef("q66_dynamic_partition_pruning",
-      (s, d) => {
-        val fact = s.read.orc(
-          OrcData.partitionedOrcPath(s, d, "lineitem", "l_returnflag"))
-        val dim = s.read.parquet(OrcData.flagDimPath(s, d))
-          .filter(col("status_name") === "returned")
-        fact.join(broadcast(dim), col("l_returnflag") === col("flag"))
-          .groupBy(col("status_name"))
-          .agg(count(lit(1)).as("n"), dsum(col("l_quantity"), "sum_qty"))
-          .orderBy(col("status_name"))
-      },
-      Some(s"""SELECT status_name, count(*) AS n,
-              |  ${oDsum("l_quantity", "sum_qty")}
-              |FROM lineitem
-              |JOIN (VALUES ('R', 'returned'), ('A', 'acknowledged'),
-              |      ('N', 'in_flight')) d(flag, status_name)
-              |  ON l_returnflag = flag
-              |WHERE status_name = 'returned'
-              |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    returnedStarJoin("q66_dynamic_partition_pruning", _.read.orc(_)),
 
     // ---------------------------------------------------------------- q73
     // q66's dynamic star-join pruning through the GRAFT-ORC connector:
@@ -1366,24 +1367,7 @@ object Relational {
     // In(l_returnflag, ...) and re-prunes the FILE list before input
     // partitions are planned ("RuntimeFilters: [dynamicpruning..." on the
     // BatchScan, asserted in PlanSpec).
-    QueryDef("q73_graft_orc_runtime_pruning",
-      (s, d) => {
-        val fact = s.read.format("graft-orc").load(
-          OrcData.partitionedOrcPath(s, d, "lineitem", "l_returnflag"))
-        val dim = s.read.parquet(OrcData.flagDimPath(s, d))
-          .filter(col("status_name") === "returned")
-        fact.join(broadcast(dim), col("l_returnflag") === col("flag"))
-          .groupBy(col("status_name"))
-          .agg(count(lit(1)).as("n"), dsum(col("l_quantity"), "sum_qty"))
-          .orderBy(col("status_name"))
-      },
-      Some(s"""SELECT status_name, count(*) AS n,
-              |  ${oDsum("l_quantity", "sum_qty")}
-              |FROM lineitem
-              |JOIN (VALUES ('R', 'returned'), ('A', 'acknowledged'),
-              |      ('N', 'in_flight')) d(flag, status_name)
-              |  ON l_returnflag = flag
-              |WHERE status_name = 'returned'
-              |GROUP BY 1 ORDER BY 1""".stripMargin))
+    returnedStarJoin("q73_graft_orc_runtime_pruning",
+      _.read.format("graft-orc").load(_))
   )
 }

@@ -87,26 +87,149 @@ object RowLevelOps {
       .select(col("c_custkey"), col("seg"), col("bal"))
       .orderBy(col("c_custkey"))
 
+  // ---------------------------------------------------------- DELETE
+  private def deleteDef(name: String, tag: String, tblProps: String,
+                        afterDrop: (SparkSession, String) => Unit =
+                          (_, _) => ()): QueryDef =
+    QueryDef(name,
+      (s, d) => {
+        val (dir, t) = freshTable(s, seeded(s, d), tag, tblProps)
+        try s.sql(s"DELETE FROM $t WHERE seg <> 'BUILDING' AND bal < 5000")
+        finally s.sql(s"DROP TABLE IF EXISTS $t")
+        afterDrop(s, dir)
+        finalState(s, dir)
+      },
+      Some(s"""SELECT c_custkey, seg, bal FROM ($seededSql)
+              |WHERE seg = 'BUILDING' OR bal >= 5000 OR bal IS NULL
+              |ORDER BY c_custkey""".stripMargin))
+
+  // ---------------------------------------------------------- UPDATE
+  private def updateDef(name: String, tag: String,
+                        tblProps: String): QueryDef =
+    QueryDef(name,
+      (s, d) => {
+        val (dir, t) = freshTable(s, seeded(s, d), tag, tblProps)
+        try s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500")
+        finally s.sql(s"DROP TABLE IF EXISTS $t")
+        finalState(s, dir)
+      },
+      Some(s"""SELECT c_custkey,
+              |  CASE WHEN bal > 7500 THEN 'PRIME' ELSE seg END AS seg, bal
+              |FROM ($seededSql)
+              |ORDER BY c_custkey""".stripMargin))
+
+  // -------------------------------------------------- MERGE / UPSERT
+  /** The upsert pair every MERGE and blind-upsert query applies: target
+    * = even keys; source = keys divisible by 3 with a new segment and
+    * doubled balance.
+    */
+  private def upsertSides(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val all = seeded(s, d)
+    (all.filter(col("c_custkey") % 2 === 0),
+      all.filter(col("c_custkey") % 3 === 0)
+        .select(col("c_custkey"), lit("MERGED").as("seg"),
+          (col("bal") * 2).as("bal")))
+  }
+
+  /** Final state of any upsert of [[upsertSides]]: the FULL OUTER JOIN
+    * of the two sides, source values winning on matched keys.
+    */
+  private val upsertOracle =
+    Some(s"""WITH seeded AS ($seededSql),
+            |t AS (SELECT * FROM seeded WHERE c_custkey % 2 = 0),
+            |s AS (SELECT c_custkey, 'MERGED' AS seg, bal * 2 AS bal
+            |      FROM seeded WHERE c_custkey % 3 = 0)
+            |SELECT COALESCE(t.c_custkey, s.c_custkey) AS c_custkey,
+            |  CASE WHEN s.c_custkey IS NOT NULL THEN s.seg ELSE t.seg
+            |    END AS seg,
+            |  CASE WHEN s.c_custkey IS NOT NULL THEN s.bal ELSE t.bal
+            |    END AS bal
+            |FROM t FULL OUTER JOIN s ON t.c_custkey = s.c_custkey
+            |ORDER BY c_custkey""".stripMargin)
+
+  private def mergeDef(name: String, tag: String,
+                       tblProps: String): QueryDef =
+    QueryDef(name,
+      (s, d) => {
+        val (target, src) = upsertSides(s, d)
+        val (dir, t) = freshTable(s, target, tag, tblProps)
+        val srcView = t + "_src"
+        src.createOrReplaceTempView(srcView)
+        try s.sql(
+          s"""MERGE INTO $t t USING $srcView s
+             |ON t.c_custkey = s.c_custkey
+             |WHEN MATCHED THEN UPDATE SET seg = s.seg, bal = s.bal
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        finally {
+          s.sql(s"DROP TABLE IF EXISTS $t")
+          s.catalog.dropTempView(srcView)
+        }
+        finalState(s, dir)
+      },
+      upsertOracle)
+
+  // ------------------------------------------------------------- CDC
+  /** The three-commit change flow every CDC query reads: a MoR DELETE
+    * (seq 2) and a MoR UPDATE (seq 3) run here; `changes` gets the
+    * table dir and the seq-4 append, runs that append where its read
+    * protocol needs it, and returns the change rows. The seq-3 UPDATE
+    * reads back as the `preimage`/`postimage` change-type pair.
+    */
+  private def cdcDef(name: String, tag: String,
+                     preimage: String, postimage: String)(
+      changes: (SparkSession, String, () => Unit) => DataFrame)
+      : QueryDef =
+    QueryDef(name,
+      (s, d) => {
+        val (dir, t) = freshTable(s, seeded(s, d), tag,
+          "'graft.delete_mode'='mor','graft.update_mode'='mor'",
+          retain = 10)
+        val appendSeq4 = () =>
+          seeded(s, d).filter(col("c_custkey") % 97 === 0)
+            .select((col("c_custkey") + 1000000).as("c_custkey"),
+              lit("NEW").as("seg"), lit(1.0).as("bal"))
+            .write.format("graft-orc").mode("append").save(dir)
+        val chg =
+          try {
+            s.sql(s"DELETE FROM $t WHERE bal < 2000")            // seq 2
+            s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500") // seq 3
+            changes(s, dir, appendSeq4)
+          } finally s.sql(s"DROP TABLE IF EXISTS $t")
+        chg.select(col("c_custkey"), col("seg"), col("bal"),
+            col("_change_type"), col("_change_seq"))
+          .orderBy(col("_change_seq"), col("_change_type"),
+            col("c_custkey"))
+      },
+      Some(s"""WITH seeded AS ($seededSql),
+              |chg AS (
+              |  SELECT c_custkey, seg, bal, 'delete' AS _change_type,
+              |    CAST(2 AS BIGINT) AS _change_seq
+              |  FROM seeded WHERE bal < 2000
+              |  UNION ALL
+              |  SELECT c_custkey, seg, bal, '$preimage', CAST(3 AS BIGINT)
+              |  FROM seeded WHERE bal > 7500
+              |  UNION ALL
+              |  SELECT c_custkey, 'PRIME', bal, '$postimage',
+              |    CAST(3 AS BIGINT)
+              |  FROM seeded WHERE bal > 7500
+              |  UNION ALL
+              |  SELECT c_custkey + 1000000, 'NEW', CAST(1.0 AS DOUBLE),
+              |    'insert', CAST(4 AS BIGINT)
+              |  FROM seeded WHERE c_custkey % 97 = 0)
+              |SELECT * FROM chg
+              |ORDER BY _change_seq, _change_type, c_custkey""".stripMargin))
+
   val defs: Seq[QueryDef] = Seq(
 
-    // ------------------------------------------------------ DELETE (CoW)
+    // ------------------------------------------------- DELETE (CoW / MoR)
     // The predicate deletes a row only when it is TRUE: `seg <> 'X'`
     // reaches the connector as Not(EqualTo) — the exact shape of the
     // tri-state NOT hazard — and a NULL bal makes the conjunction NULL,
     // so those rows must all SURVIVE. Survivors are therefore
     // seg = 'BUILDING' OR bal >= 5000 OR bal IS NULL.
-    QueryDef("rl_delete_cow",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "del")
-        try s.sql(s"DELETE FROM $t WHERE seg <> 'BUILDING' AND bal < 5000")
-        finally s.sql(s"DROP TABLE IF EXISTS $t")
-        finalState(s, dir)
-      },
-      Some(s"""SELECT c_custkey, seg, bal FROM ($seededSql)
-              |WHERE seg = 'BUILDING' OR bal >= 5000 OR bal IS NULL
-              |ORDER BY c_custkey""".stripMargin)),
+    deleteDef("rl_delete_cow", "del", ""),
 
-    // ------------------------------------------------------ DELETE (MoR)
     // The SAME tri-state DELETE under graft.delete_mode=mor: nothing is
     // rewritten — the commit adds position-delete sidecars and the READ
     // path subtracts them (row-wise scan, per-file sorted position sets).
@@ -115,53 +238,21 @@ object RowLevelOps {
     // (sidecar bytes), not bytes rewritten — the right trade for sparse
     // deletes across a 100 TB table; a purge compaction later restores
     // the vectorized path.
-    QueryDef("rl_delete_mor",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "mord",
-          "'graft.delete_mode'='mor'")
-        try s.sql(s"DELETE FROM $t WHERE seg <> 'BUILDING' AND bal < 5000")
-        finally s.sql(s"DROP TABLE IF EXISTS $t")
-        finalState(s, dir)
-      },
-      Some(s"""SELECT c_custkey, seg, bal FROM ($seededSql)
-              |WHERE seg = 'BUILDING' OR bal >= 5000 OR bal IS NULL
-              |ORDER BY c_custkey""".stripMargin)),
+    deleteDef("rl_delete_mor", "mord", "'graft.delete_mode'='mor'"),
 
-    // ------------------------------------------- DELETE (MoR) + purge
     // The maintenance half of the contract: purge rewrites exactly the
     // sidecar-affected files without their deleted rows, retires every
     // sidecar in one snapshot, and the table reads vectorized again —
     // with the same hash as the un-purged MoR read.
-    QueryDef("rl_delete_mor_purge",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "morp",
-          "'graft.delete_mode'='mor'")
-        try s.sql(s"DELETE FROM $t WHERE seg <> 'BUILDING' AND bal < 5000")
-        finally s.sql(s"DROP TABLE IF EXISTS $t")
-        graft.sources.v2.GraftOrcMor.purge(s, dir)
-        finalState(s, dir)
-      },
-      Some(s"""SELECT c_custkey, seg, bal FROM ($seededSql)
-              |WHERE seg = 'BUILDING' OR bal >= 5000 OR bal IS NULL
-              |ORDER BY c_custkey""".stripMargin)),
+    deleteDef("rl_delete_mor_purge", "morp", "'graft.delete_mode'='mor'",
+      (s, dir) => graft.sources.v2.GraftOrcMor.purge(s, dir)),
 
-    // ------------------------------------------------------ UPDATE (CoW)
+    // ------------------------------------------------- UPDATE (CoW / MoR)
     // Group-based copy-on-write UPDATE: only files whose stat range
     // intersects the condition are replaced; a NULL bal is not > 7500,
     // so those rows keep their segment.
-    QueryDef("rl_update_cow",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "upd")
-        try s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500")
-        finally s.sql(s"DROP TABLE IF EXISTS $t")
-        finalState(s, dir)
-      },
-      Some(s"""SELECT c_custkey,
-              |  CASE WHEN bal > 7500 THEN 'PRIME' ELSE seg END AS seg, bal
-              |FROM ($seededSql)
-              |ORDER BY c_custkey""".stripMargin)),
+    updateDef("rl_update_cow", "upd", ""),
 
-    // ------------------------------------------------------ UPDATE (MoR)
     // The SAME UPDATE as a position-DELTA (SupportsDelta,
     // graft.update_mode=mor): the plan reads ONLY the matching rows and
     // commits position-delete sidecars for their old copies plus new
@@ -169,94 +260,19 @@ object RowLevelOps {
     // rewritten. Hash-identical to the CoW form is the merge-on-read
     // contract; at 100 TB this turns "update 0.01% of rows" from a
     // table rewrite into work ∝ rows changed.
-    QueryDef("rl_update_mor",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "updm",
-          "'graft.update_mode'='mor'")
-        try s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500")
-        finally s.sql(s"DROP TABLE IF EXISTS $t")
-        finalState(s, dir)
-      },
-      Some(s"""SELECT c_custkey,
-              |  CASE WHEN bal > 7500 THEN 'PRIME' ELSE seg END AS seg, bal
-              |FROM ($seededSql)
-              |ORDER BY c_custkey""".stripMargin)),
+    updateDef("rl_update_mor", "updm", "'graft.update_mode'='mor'"),
 
-    // -------------------------------------------------- MERGE INTO (CoW)
+    // --------------------------------------------- MERGE INTO (CoW / MoR)
     // Upsert: target = even keys, source = keys divisible by 3 with
     // doubled balance and a new segment. Matched rows take the source
-    // values; unmatched source rows insert. The oracle is the equivalent
-    // FULL OUTER JOIN of the two sides.
-    QueryDef("rl_merge_cow",
-      (s, d) => {
-        val all = seeded(s, d)
-        val (dir, t) = freshTable(s, all.filter(col("c_custkey") % 2 === 0),
-          "mrg")
-        val srcView = t + "_src"
-        all.filter(col("c_custkey") % 3 === 0)
-          .select(col("c_custkey"), lit("MERGED").as("seg"),
-            (col("bal") * 2).as("bal"))
-          .createOrReplaceTempView(srcView)
-        try s.sql(
-          s"""MERGE INTO $t t USING $srcView s
-             |ON t.c_custkey = s.c_custkey
-             |WHEN MATCHED THEN UPDATE SET seg = s.seg, bal = s.bal
-             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-        finally {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          s.catalog.dropTempView(srcView)
-        }
-        finalState(s, dir)
-      },
-      Some(s"""WITH seeded AS ($seededSql),
-              |t AS (SELECT * FROM seeded WHERE c_custkey % 2 = 0),
-              |s AS (SELECT c_custkey, 'MERGED' AS seg, bal * 2 AS bal
-              |      FROM seeded WHERE c_custkey % 3 = 0)
-              |SELECT COALESCE(t.c_custkey, s.c_custkey) AS c_custkey,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.seg ELSE t.seg
-              |    END AS seg,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.bal ELSE t.bal
-              |    END AS bal
-              |FROM t FULL OUTER JOIN s ON t.c_custkey = s.c_custkey
-              |ORDER BY c_custkey""".stripMargin)),
+    // values; unmatched source rows insert.
+    mergeDef("rl_merge_cow", "mrg", ""),
 
-    // -------------------------------------------------- MERGE INTO (MoR)
     // The SAME upsert as a position-delta (graft.merge_mode=mor):
     // matched rows become (position-delete, insert) pairs, unmatched
     // source rows plain inserts — MERGE cost ∝ rows changed, and the
     // final state hashes identically to the CoW plan's.
-    QueryDef("rl_merge_mor",
-      (s, d) => {
-        val all = seeded(s, d)
-        val (dir, t) = freshTable(s, all.filter(col("c_custkey") % 2 === 0),
-          "mrgm", "'graft.merge_mode'='mor'")
-        val srcView = t + "_src"
-        all.filter(col("c_custkey") % 3 === 0)
-          .select(col("c_custkey"), lit("MERGED").as("seg"),
-            (col("bal") * 2).as("bal"))
-          .createOrReplaceTempView(srcView)
-        try s.sql(
-          s"""MERGE INTO $t t USING $srcView s
-             |ON t.c_custkey = s.c_custkey
-             |WHEN MATCHED THEN UPDATE SET seg = s.seg, bal = s.bal
-             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-        finally {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          s.catalog.dropTempView(srcView)
-        }
-        finalState(s, dir)
-      },
-      Some(s"""WITH seeded AS ($seededSql),
-              |t AS (SELECT * FROM seeded WHERE c_custkey % 2 = 0),
-              |s AS (SELECT c_custkey, 'MERGED' AS seg, bal * 2 AS bal
-              |      FROM seeded WHERE c_custkey % 3 = 0)
-              |SELECT COALESCE(t.c_custkey, s.c_custkey) AS c_custkey,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.seg ELSE t.seg
-              |    END AS seg,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.bal ELSE t.bal
-              |    END AS bal
-              |FROM t FULL OUTER JOIN s ON t.c_custkey = s.c_custkey
-              |ORDER BY c_custkey""".stripMargin)),
+    mergeDef("rl_merge_mor", "mrgm", "'graft.merge_mode'='mor'"),
 
     // ------------------------------------------- blind UPSERT (equality)
     // The SAME upsert as rl_merge_* but through GraftOrcEqDelete.upsert:
@@ -267,28 +283,14 @@ object RowLevelOps {
     // target scan into work ∝ the batch.
     QueryDef("rl_upsert_eq",
       (s, d) => {
-        val all = seeded(s, d)
-        val (dir, t) = freshTable(s, all.filter(col("c_custkey") % 2 === 0),
-          "upse")
-        try graft.sources.v2.GraftOrcEqDelete.upsert(s, dir,
-          all.filter(col("c_custkey") % 3 === 0)
-            .select(col("c_custkey"), lit("MERGED").as("seg"),
-              (col("bal") * 2).as("bal")),
+        val (target, src) = upsertSides(s, d)
+        val (dir, t) = freshTable(s, target, "upse")
+        try graft.sources.v2.GraftOrcEqDelete.upsert(s, dir, src,
           Seq("c_custkey"))
         finally s.sql(s"DROP TABLE IF EXISTS $t")
         finalState(s, dir)
       },
-      Some(s"""WITH seeded AS ($seededSql),
-              |t AS (SELECT * FROM seeded WHERE c_custkey % 2 = 0),
-              |s AS (SELECT c_custkey, 'MERGED' AS seg, bal * 2 AS bal
-              |      FROM seeded WHERE c_custkey % 3 = 0)
-              |SELECT COALESCE(t.c_custkey, s.c_custkey) AS c_custkey,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.seg ELSE t.seg
-              |    END AS seg,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.bal ELSE t.bal
-              |    END AS bal
-              |FROM t FULL OUTER JOIN s ON t.c_custkey = s.c_custkey
-              |ORDER BY c_custkey""".stripMargin)),
+      upsertOracle),
 
     // --------------------------------- upsert x hidden partitioning
     // Blind upsert into a bucket(8, c_custkey)-partitioned table
@@ -303,33 +305,20 @@ object RowLevelOps {
     // at 100 TB at all).
     QueryDef("rl_upsert_hidden",
       (s, d) => {
-        val all = seeded(s, d)
+        val (target, src) = upsertSides(s, d)
         val dir = java.nio.file.Files
           .createTempDirectory("graft-rl-upsh").toString
         tempDirs.add(new java.io.File(dir))
-        all.filter(col("c_custkey") % 2 === 0).repartition(4)
+        target.repartition(4)
           .write.format("graft-orc")
           .option("graft.manifest", "true")
           .option("graft.partition_spec", "bucket(8, c_custkey)")
           .mode("append").save(dir)
-        graft.sources.v2.GraftOrcEqDelete.upsert(s, dir,
-          all.filter(col("c_custkey") % 3 === 0)
-            .select(col("c_custkey"), lit("MERGED").as("seg"),
-              (col("bal") * 2).as("bal")),
+        graft.sources.v2.GraftOrcEqDelete.upsert(s, dir, src,
           Seq("c_custkey"))
         finalState(s, dir)
       },
-      Some(s"""WITH seeded AS ($seededSql),
-              |t AS (SELECT * FROM seeded WHERE c_custkey % 2 = 0),
-              |s AS (SELECT c_custkey, 'MERGED' AS seg, bal * 2 AS bal
-              |      FROM seeded WHERE c_custkey % 3 = 0)
-              |SELECT COALESCE(t.c_custkey, s.c_custkey) AS c_custkey,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.seg ELSE t.seg
-              |    END AS seg,
-              |  CASE WHEN s.c_custkey IS NOT NULL THEN s.bal ELSE t.bal
-              |    END AS bal
-              |FROM t FULL OUTER JOIN s ON t.c_custkey = s.c_custkey
-              |ORDER BY c_custkey""".stripMargin)),
+      upsertOracle),
 
     // ------------------------------------------------- CDC changelog
     // Row-level change feed between snapshots (GraftOrcChangelog): a MoR
@@ -341,42 +330,11 @@ object RowLevelOps {
     // as deletes, and the snapshot attribution. Scale shape: each
     // snapshot's changes are read from only the files that snapshot
     // touched — the changelog never scans the table.
-    QueryDef("rl_cdc_changelog",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "cdc",
-          "'graft.delete_mode'='mor','graft.update_mode'='mor'",
-          retain = 10)
-        try {
-          s.sql(s"DELETE FROM $t WHERE bal < 2000")            // seq 2
-          s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500") // seq 3
-          seeded(s, d).filter(col("c_custkey") % 97 === 0)
-            .select((col("c_custkey") + 1000000).as("c_custkey"),
-              lit("NEW").as("seg"), lit(1.0).as("bal"))
-            .write.format("graft-orc").mode("append").save(dir) // seq 4
-        } finally s.sql(s"DROP TABLE IF EXISTS $t")
+    cdcDef("rl_cdc_changelog", "cdc", "delete", "insert") {
+      (s, dir, appendSeq4) =>
+        appendSeq4()
         graft.sources.v2.GraftOrcChangelog.between(s, dir, 1L)
-          .select(col("c_custkey"), col("seg"), col("bal"),
-            col("_change_type"), col("_change_seq"))
-          .orderBy(col("_change_seq"), col("_change_type"),
-            col("c_custkey"))
-      },
-      Some(s"""WITH seeded AS ($seededSql),
-              |chg AS (
-              |  SELECT c_custkey, seg, bal, 'delete' AS _change_type,
-              |    CAST(2 AS BIGINT) AS _change_seq
-              |  FROM seeded WHERE bal < 2000
-              |  UNION ALL
-              |  SELECT c_custkey, seg, bal, 'delete', CAST(3 AS BIGINT)
-              |  FROM seeded WHERE bal > 7500
-              |  UNION ALL
-              |  SELECT c_custkey, 'PRIME', bal, 'insert', CAST(3 AS BIGINT)
-              |  FROM seeded WHERE bal > 7500
-              |  UNION ALL
-              |  SELECT c_custkey + 1000000, 'NEW', CAST(1.0 AS DOUBLE),
-              |    'insert', CAST(4 AS BIGINT)
-              |  FROM seeded WHERE c_custkey % 97 = 0)
-              |SELECT * FROM chg
-              |ORDER BY _change_seq, _change_type, c_custkey""".stripMargin)),
+    },
 
     // --------------------------------------- CDC changelog, update-paired
     // The SAME flow read through betweenPaired keyed on c_custkey (a
@@ -387,45 +345,13 @@ object RowLevelOps {
     // key), while the seq-2 pure deletes and seq-4 pure appends keep
     // their raw vocabulary. The oracle constructs the paired rows
     // directly — what gets hash-checked is the pairing rule itself.
-    QueryDef("rl_cdc_changelog_upd",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "cdcu",
-          "'graft.delete_mode'='mor','graft.update_mode'='mor'",
-          retain = 10)
-        try {
-          s.sql(s"DELETE FROM $t WHERE bal < 2000")            // seq 2
-          s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500") // seq 3
-          seeded(s, d).filter(col("c_custkey") % 97 === 0)
-            .select((col("c_custkey") + 1000000).as("c_custkey"),
-              lit("NEW").as("seg"), lit(1.0).as("bal"))
-            .write.format("graft-orc").mode("append").save(dir) // seq 4
-        } finally s.sql(s"DROP TABLE IF EXISTS $t")
+    cdcDef("rl_cdc_changelog_upd", "cdcu",
+        "update_preimage", "update_postimage") {
+      (s, dir, appendSeq4) =>
+        appendSeq4()
         graft.sources.v2.GraftOrcChangelog
           .betweenPaired(s, dir, 1L, keys = Seq("c_custkey"))
-          .select(col("c_custkey"), col("seg"), col("bal"),
-            col("_change_type"), col("_change_seq"))
-          .orderBy(col("_change_seq"), col("_change_type"),
-            col("c_custkey"))
-      },
-      Some(s"""WITH seeded AS ($seededSql),
-              |chg AS (
-              |  SELECT c_custkey, seg, bal, 'delete' AS _change_type,
-              |    CAST(2 AS BIGINT) AS _change_seq
-              |  FROM seeded WHERE bal < 2000
-              |  UNION ALL
-              |  SELECT c_custkey, seg, bal, 'update_preimage',
-              |    CAST(3 AS BIGINT)
-              |  FROM seeded WHERE bal > 7500
-              |  UNION ALL
-              |  SELECT c_custkey, 'PRIME', bal, 'update_postimage',
-              |    CAST(3 AS BIGINT)
-              |  FROM seeded WHERE bal > 7500
-              |  UNION ALL
-              |  SELECT c_custkey + 1000000, 'NEW', CAST(1.0 AS DOUBLE),
-              |    'insert', CAST(4 AS BIGINT)
-              |  FROM seeded WHERE c_custkey % 97 = 0)
-              |SELECT * FROM chg
-              |ORDER BY _change_seq, _change_type, c_custkey""".stripMargin)),
+    },
 
     // ------------------------------------------------ CDC change FEED
     // The checkpointed consumption loop (GraftOrcChangelog.feed): two
@@ -434,53 +360,20 @@ object RowLevelOps {
     // their union must equal the full paired changelog. What gets
     // hash-checked is the checkpoint arithmetic: no change delivered
     // twice, none skipped, across independent polls.
-    QueryDef("rl_cdc_feed",
-      (s, d) => {
-        val (dir, t) = freshTable(s, seeded(s, d), "cdcf",
-          "'graft.delete_mode'='mor','graft.update_mode'='mor'",
-          retain = 10)
+    cdcDef("rl_cdc_feed", "cdcf", "update_preimage", "update_postimage") {
+      (s, dir, appendSeq4) =>
         val ckpt = java.nio.file.Files
           .createTempDirectory("graft-feed").toString + "/seq"
-        try {
-          s.sql(s"DELETE FROM $t WHERE bal < 2000")            // seq 2
-          s.sql(s"UPDATE $t SET seg = 'PRIME' WHERE bal > 7500") // seq 3
-          val f1 = graft.sources.v2.GraftOrcChangelog.feed(
-            s, dir, ckpt, pairKeys = Seq("c_custkey"),
-            initialSeq = 1L).get
-          f1.commit()
-          seeded(s, d).filter(col("c_custkey") % 97 === 0)
-            .select((col("c_custkey") + 1000000).as("c_custkey"),
-              lit("NEW").as("seg"), lit(1.0).as("bal"))
-            .write.format("graft-orc").mode("append").save(dir) // seq 4
-          val f2 = graft.sources.v2.GraftOrcChangelog.feed(
-            s, dir, ckpt, pairKeys = Seq("c_custkey")).get
-          f2.commit()
-          f1.df.unionByName(f2.df)
-            .select(col("c_custkey"), col("seg"), col("bal"),
-              col("_change_type"), col("_change_seq"))
-            .orderBy(col("_change_seq"), col("_change_type"),
-              col("c_custkey"))
-        } finally s.sql(s"DROP TABLE IF EXISTS $t")
-      },
-      Some(s"""WITH seeded AS ($seededSql),
-              |chg AS (
-              |  SELECT c_custkey, seg, bal, 'delete' AS _change_type,
-              |    CAST(2 AS BIGINT) AS _change_seq
-              |  FROM seeded WHERE bal < 2000
-              |  UNION ALL
-              |  SELECT c_custkey, seg, bal, 'update_preimage',
-              |    CAST(3 AS BIGINT)
-              |  FROM seeded WHERE bal > 7500
-              |  UNION ALL
-              |  SELECT c_custkey, 'PRIME', bal, 'update_postimage',
-              |    CAST(3 AS BIGINT)
-              |  FROM seeded WHERE bal > 7500
-              |  UNION ALL
-              |  SELECT c_custkey + 1000000, 'NEW', CAST(1.0 AS DOUBLE),
-              |    'insert', CAST(4 AS BIGINT)
-              |  FROM seeded WHERE c_custkey % 97 = 0)
-              |SELECT * FROM chg
-              |ORDER BY _change_seq, _change_type, c_custkey""".stripMargin)),
+        val f1 = graft.sources.v2.GraftOrcChangelog.feed(
+          s, dir, ckpt, pairKeys = Seq("c_custkey"),
+          initialSeq = 1L).get
+        f1.commit()
+        appendSeq4()
+        val f2 = graft.sources.v2.GraftOrcChangelog.feed(
+          s, dir, ckpt, pairKeys = Seq("c_custkey")).get
+        f2.commit()
+        f1.df.unionByName(f2.df)
+    },
 
     // ------------------------------------- write-audit-publish (branch)
     // The WAP loop under the hash oracle: fork an `ingest` branch, stage

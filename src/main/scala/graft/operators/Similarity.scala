@@ -52,6 +52,8 @@ object Similarity {
   private[graft] val RangeTables = 24
   private[graft] val RangePlanes = 6
   private[graft] val RangeQueries = 40
+  // query ids of the det ANN twins (ss_ann_lsh_det / ss_ann_ivf_det)
+  private val DetQueries = 40
 
   /** Quantized 16-prefix as one BIGINT-array column — native codegen'd
     * kernel (the HOF `transform(slice(...))` form is CodegenFallback
@@ -73,15 +75,46 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     val qv8 =
       graft.functions.NativeExpressions.quantizePrefix(col("embedding"), 8)
-    val long = e.select(col("vec_id"),
+    queryBucketCandidates(e.select(col("vec_id"),
       posexplode(DetLsh.bucketArray(qv8, RangeTables, RangePlanes))
-        .as(Seq("t", "bucket")))
-    val q = long.filter(col("vec_id") < RangeQueries)
+        .as(Seq("t", "bucket"))), RangeQueries)
+  }
+
+  /** Query-side LSH candidate join shared by the det top-k and radius
+    * paths: every (query, neighbor) pair of `long(vec_id, t, bucket)`
+    * sharing a bucket, with ids below `queries` as the broadcast query
+    * side — ids-only through the bucket equi-join and the dedup.
+    */
+  private def queryBucketCandidates(long: DataFrame,
+                                    queries: Int): DataFrame = {
+    val q = long.filter(col("vec_id") < queries)
       .select(col("vec_id").as("q_id"), col("t"), col("bucket"))
     long.select(col("vec_id").as("n_id"), col("t"), col("bucket"))
       .join(broadcast(q), Seq("t", "bucket"))
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id")).distinct()
+  }
+
+  /** Det ANN tail shared by the LSH and IVF det twins: scores each
+    * (q_id, n_id) candidate by the BIGINT dot product of the quantized
+    * 16-prefixes in `base(vec_id, qv)` (query side broadcast) and keeps
+    * each query's top 3 in (score DESC, n_id) order.
+    */
+  private def detTop3(cand: DataFrame, base: DataFrame): DataFrame = {
+    val qSide = base.filter(col("vec_id") < DetQueries)
+      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
+    val nSide = base.select(col("vec_id").as("n_id"),
+      col("qv").as("n_qv"))
+    val scored = cand.join(broadcast(qSide), "q_id")
+      .join(nSide, "n_id")
+      .withColumn("score", graft.functions.NativeExpressions
+        .intDot(col("q_qv"), col("n_qv")))
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("score").desc, col("n_id"))
+    scored.withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= 3)
+      .select(col("q_id"), col("rnk"), col("n_id"), col("score"))
+      .orderBy(col("q_id"), col("rnk"))
   }
 
   /** Candidates with the BIGINT dot product and squared norms of the
@@ -252,29 +285,9 @@ object Similarity {
           DetLsh.bucketArray(graft.functions.NativeExpressions
               .quantizePrefix(col("embedding"), DetLsh.Dims),
             DetLsh.Tables, DetLsh.Planes).as("bks"))
-        val long = base.select(col("vec_id"),
-          posexplode(col("bks")).as(Seq("t", "bucket")))
-        val q = long.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("q_id"), col("t"), col("bucket"))
-        val cand = long.select(col("vec_id").as("n_id"), col("t"),
-            col("bucket"))
-          .join(broadcast(q), Seq("t", "bucket"))
-          .filter(col("n_id") =!= col("q_id"))
-          .select(col("q_id"), col("n_id")).distinct()
-        val qSide = base.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-        val nSide = base.select(col("vec_id").as("n_id"),
-          col("qv").as("n_qv"))
-        val scored = cand.join(broadcast(qSide), "q_id")
-          .join(nSide, "n_id")
-          .withColumn("score", graft.functions.NativeExpressions
-            .intDot(col("q_qv"), col("n_qv")))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("score").desc, col("n_id"))
-        scored.withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= 3)
-          .select(col("q_id"), col("rnk"), col("n_id"), col("score"))
-          .orderBy(col("q_id"), col("rnk"))
+        detTop3(queryBucketCandidates(base.select(col("vec_id"),
+            posexplode(col("bks")).as(Seq("t", "bucket"))), DetQueries),
+          base)
       },
       Some(s"""WITH v AS (
               |  SELECT vec_id, list_transform(range(1, 17), j ->
@@ -335,7 +348,7 @@ object Similarity {
         val q2 = element_at(col("qv"), 2)
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("dist"), col("c_id"))
-        val probes = assigned.filter(col("vec_id") < 40)
+        val probes = assigned.filter(col("vec_id") < DetQueries)
           .select(col("vec_id").as("q_id"), col("qv"))
           .crossJoin(broadcast(cells))
           .withColumn("dist", (q1 - col("cx")) * (q1 - col("cx")) +
@@ -345,25 +358,12 @@ object Similarity {
           .select(col("q_id"), col("c_id"))
         // a vector sits in exactly ONE cell and a query's probe cells are
         // distinct, so (q_id, n_id) occurs at most once — no dedup needed
-        val cand = assigned
-          .select(col("vec_id").as("n_id"), col("c_id"))
-          .join(broadcast(probes), Seq("c_id"))
-          .filter(col("n_id") =!= col("q_id"))
-          .select(col("q_id"), col("n_id"))
-        val qSide = base.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-        val nSide = base.select(col("vec_id").as("n_id"),
-          col("qv").as("n_qv"))
-        val scored = cand.join(broadcast(qSide), "q_id")
-          .join(nSide, "n_id")
-          .withColumn("score", graft.functions.NativeExpressions
-            .intDot(col("q_qv"), col("n_qv")))
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("score").desc, col("n_id"))
-        scored.withColumn("rnk", row_number().over(wr).cast("long"))
-          .filter(col("rnk") <= 3)
-          .select(col("q_id"), col("rnk"), col("n_id"), col("score"))
-          .orderBy(col("q_id"), col("rnk"))
+        detTop3(assigned
+            .select(col("vec_id").as("n_id"), col("c_id"))
+            .join(broadcast(probes), Seq("c_id"))
+            .filter(col("n_id") =!= col("q_id"))
+            .select(col("q_id"), col("n_id")),
+          base)
       },
       Some("""WITH v AS (
              |  SELECT vec_id, list_transform(range(1, 17), j ->

@@ -23,13 +23,6 @@ object TextAnalysis {
     */
   private[graft] val HotKeyK = 1024
 
-  /** Skew-gate probe shared by [[bigramLm]] and [[perplexity]]: engage
-    * the heavy-hitter hot/cold split only when the (persisted,
-    * model-sized) frame's heaviest join key carries at least
-    * 1/(2 * shuffle partitions) of the total joined rows — i.e. a key
-    * that would at least double one reducer's fair share. One tiny
-    * aggregate job over the cached model; the corpus is not re-scanned.
-    */
   /** One-slot cache for the persisted model frame. A new invocation over
     * the SAME input reuses the previous run's cached frame (plan-level
     * `sameResult`, the same matching Spark's CacheManager does — repeated
@@ -86,6 +79,13 @@ object TextAnalysis {
   }
   private val perplexityDetOccSlot = new CheckpointSlot
 
+  /** Skew-gate probe shared by [[bigramLm]] and [[perplexity]]: engage
+    * the heavy-hitter hot/cold split only when the (persisted,
+    * model-sized) frame's heaviest join key carries at least
+    * 1/(2 * shuffle partitions) of the total joined rows — i.e. a key
+    * that would at least double one reducer's fair share. One tiny
+    * aggregate job over the cached model; the corpus is not re-scanned.
+    */
   private def skewGate(model: org.apache.spark.sql.DataFrame,
                        keyRowsCol: String): Boolean = {
     val prof = model.agg(max(col(keyRowsCol)), sum(col(keyRowsCol))).head()
@@ -188,6 +188,27 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** The perplexity twins' corpus frame: `docs` tokenized on spaces
+    * (documents of >= 2 tokens), each adjacent token pair (u, w) as
+    * md5Key60 keys, and `o` = its occurrences per document — one row per
+    * (doc, bigram), so map-side combine collapses in-document repetition
+    * before anything shuffles on the bigram key.
+    */
+  private def bigramOcc(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import graft.functions.TextHashFunctions.md5Key60
+    val toks = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .filter(size(col("toks")) >= 2)
+    toks.select(col("doc_id"),
+      explode(expr("transform(sequence(1, size(toks) - 1), " +
+        "i -> struct(element_at(toks, i) AS u, element_at(toks, i + 1) AS w))"))
+        .as("bg"))
+      .select(col("doc_id"), md5Key60(col("bg.u")).as("u"),
+        md5Key60(col("bg.w")).as("w"))
+      .groupBy(col("doc_id"), col("u"), col("w"))
+      .agg(count(lit(1)).as("o"))
+  }
+
   /** Bigram-LM perplexity per document — the quality-filtering staple
     * (CCNet/Gopher-style): train an add-k smoothed bigram model on the
     * corpus ITSELF, score each document by
@@ -207,25 +228,12 @@ object TextAnalysis {
     */
   def perplexity(docs0: org.apache.spark.sql.DataFrame,
                  k: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    import graft.functions.TextHashFunctions.md5Key60
-    val toks = Spread.spread(docs0, col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 2)
-    val bi = toks.select(col("doc_id"),
-      explode(expr("transform(sequence(1, size(toks) - 1), " +
-        "i -> struct(element_at(toks, i) AS u, element_at(toks, i + 1) AS w))"))
-        .as("bg"))
-      .select(col("doc_id"), md5Key60(col("bg.u")).as("u"),
-        md5Key60(col("bg.w")).as("w"))
-    // one row per (doc, bigram): map-side combine collapses in-document
-    // repetition before anything shuffles on the bigram key.
     // NOT checkpointed (r22 interleaved A/B, 4 cold runs each: with an
     // occ checkpoint ~8.7 s, without ~8.1 s — the persisted cb model
     // below already decouples the expensive branches here, so the extra
     // materialization only added cost; the DET twin, which has no
     // persisted model, is where the occ checkpoint wins)
-    val occ = bi.groupBy(col("doc_id"), col("u"), col("w"))
-      .agg(count(lit(1)).as("o"))
+    val occ = bigramOcc(Spread.spread(docs0, col("doc_id")))
     // persisted model frame: the skew probe and the main job share one
     // corpus pass (kr = occ rows per join key, the skew dimension)
     val cb = perplexityModelSlot.persistRotating(occ.groupBy(col("u"), col("w"))
@@ -303,16 +311,6 @@ object TextAnalysis {
     */
   def perplexityDet(docs0: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import graft.functions.TextHashFunctions.md5Key60
-    val toks = Spread.spread(docs0, col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 2)
-    val bi = toks.select(col("doc_id"),
-      explode(expr("transform(sequence(1, size(toks) - 1), " +
-        "i -> struct(element_at(toks, i) AS u, element_at(toks, i + 1) AS w))"))
-        .as("bg"))
-      .select(col("doc_id"), md5Key60(col("bg.u")).as("u"),
-        md5Key60(col("bg.w")).as("w"))
     // eagerly checkpointed (rotating slot): occ feeds the model build
     // (cb -> cu/v/model) AND the corpus-scale score join — without the
     // checkpoint the executed plan re-derived the tokenize+explode+md5
@@ -321,8 +319,7 @@ object TextAnalysis {
     // (doc, bigram) — corpus-bounded, the same frame the r21 cb-persist
     // A/B showed was too far downstream to matter.
     val occ = perplexityDetOccSlot.checkpointRotating(
-      bi.groupBy(col("doc_id"), col("u"), col("w"))
-        .agg(count(lit(1)).as("o")))
+      bigramOcc(Spread.spread(docs0, col("doc_id"))))
     val cb = occ.groupBy(col("u"), col("w")).agg(sum(col("o")).as("cb"))
     val cu = cb.groupBy(col("u")).agg(sum(col("cb")).as("cu"))
     val v = cb.select(col("u").as("t")).union(cb.select(col("w").as("t")))

@@ -18,12 +18,6 @@ object OrcStatistics {
 
   final case class TableStats(numRows: Long, totalBytes: Long, numFiles: Int)
 
-  /** Driver-side metadata concurrency, mirroring the connector's
-    * `graft.meta_fetch_concurrency` default (reference bounds footer
-    * fetches the same way: src/file_format.rs:146-155).
-    */
-  private val MetaParallelism = 32
-
   /** Recursive, bounded-parallel listing through the connector's file
     * index — a 100k-file nested tree costs O(depth) parallel listing waves
     * plus parallel footer reads, never 100k sequential driver RPCs (the
@@ -31,17 +25,19 @@ object OrcStatistics {
     */
   private def orcFiles(spark: SparkSession, path: String): Seq[Path] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    new GraftOrcFileIndex(conf, Seq(path), MetaParallelism)
+    new GraftOrcFileIndex(conf, Seq(path))
       .entries.map(e => new Path(e.path))
   }
 
   /** Exact table statistics from ORC footers (no data decode); footer
-    * reads run at bounded parallelism like the listing.
+    * reads run through the connector's bounded metadata pool like the
+    * listing (the reference bounds footer fetches the same way:
+    * src/file_format.rs:146-155).
     */
   def tableStats(spark: SparkSession, path: String): TableStats = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = orcFiles(spark, path)
-    val perFile = GraftOrcFileIndex.parallelMap(files, MetaParallelism) { f =>
+    val perFile = GraftOrcFileIndex.parallelMap(files) { f =>
       val reader = OrcFile.createReader(f, OrcFile.readerOptions(conf))
       try (reader.getNumberOfRows, reader.getContentLength)
       finally reader.close()

@@ -109,7 +109,7 @@ object OrcTables {
   def mergeFooterSchemas(spark: SparkSession, files: Seq[String],
                          ignoreCorrupt: Boolean): StructType = {
     val conf = GraftOrcShims.hadoopConf(spark)
-    val footers = GraftOrcFileIndex.parallelMap(files, MetaParallelism) { f =>
+    val footers = GraftOrcFileIndex.parallelMap(files) { f =>
       GraftOrcShims.footerSchema(new Path(f), conf, ignoreCorrupt)
     }
     GraftOrcShims.mergeSchemas(footers.flatten,
@@ -128,11 +128,6 @@ object OrcTables {
     else GraftOrcShims.mergeDataAndPartitionSchema(data,
       index.partitionSchema(spark), GraftOrcShims.caseSensitiveAnalysis(spark))
   }
-
-  /** Concurrent footer reads on the driver (reference
-    * `meta_fetch_concurrency`: src/file_format.rs:146-155).
-    */
-  private val MetaParallelism = 32
 
   /** Register every `<name>.orc` file/dir under `dir` as a temp view —
     * the analogue of ListingTable registration
@@ -165,27 +160,20 @@ object OrcTables {
     * filters buy point-lookup stripe skips at ~1-2% size cost — the two
     * knobs that matter when laying out data for 100 TB scans.
     *
-    * Spark's ORC writer reads these from the Hadoop configuration (not
-    * from writer options), so they are set for the duration of the write
-    * and restored after.
+    * Both ride as write options: Spark copies a write's options into that
+    * job's Hadoop configuration, where the ORC writer reads them — the
+    * session's shared configuration is never touched.
     */
   def writeTuned(df: DataFrame, path: String,
                  compression: String = "snappy",
                  stripeSizeBytes: Option[Long] = None,
                  bloomFilterColumns: Seq[String] = Nil,
                  mode: String = "overwrite"): Unit = {
-    val hc = df.sparkSession.sparkContext.hadoopConfiguration
     val tuned = Seq(
       stripeSizeBytes.map("orc.stripe.size" -> _.toString),
       Option.when(bloomFilterColumns.nonEmpty)(
         "orc.bloom.filter.columns" -> bloomFilterColumns.mkString(","))).flatten
-    val saved = tuned.map { case (k, _) => k -> Option(hc.get(k)) }
-    try {
-      tuned.foreach { case (k, v) => hc.set(k, v) }
-      df.write.mode(mode).option("compression", compression).orc(path)
-    } finally saved.foreach {
-      case (k, Some(v)) => hc.set(k, v)
-      case (k, None) => hc.unset(k)
-    }
+    df.write.mode(mode).option("compression", compression)
+      .options(tuned.toMap).orc(path)
   }
 }

@@ -446,7 +446,7 @@ object GraftOrcCompact {
       if (GraftOrcManifest.exists(tfs, tfs.makeQualified(tp)))
         GraftOrcMor.purge(spark, table)
     }
-    val entries = new GraftOrcFileIndex(conf, Seq(table), 32).entries
+    val entries = new GraftOrcFileIndex(conf, Seq(table)).entries
     // group by PARTITION directory: a `w-<commitId>` wave directory is a
     // publish artifact, not partition identity — files from different
     // waves of the same partition compact together (their merged output

@@ -16,6 +16,7 @@ import org.apache.orc.mapred.OrcInputFormat
 import org.apache.spark.memory.MemoryMode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -57,7 +58,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (reference `partition_fields`: src/opener.rs:59, src/source.rs:171).
   * Driver-side metadata work (listing, footer reads for stats and
   * stripe-split planning) runs through a bounded pool
-  * (`graft.meta_fetch_concurrency`, default 32) — never one file at a time
+  * (32 concurrent requests) — never one file at a time
   * (reference meta_fetch_concurrency: src/file_format.rs:146-155).
   * Decode is delegated to Spark's vectorized `OrcColumnarBatchReader` —
   * the point of the rebuild is the connector protocol, not a slower
@@ -75,7 +76,7 @@ class GraftOrcDataSource extends TableProvider with DataSourceRegister {
     // .orc files merges to an EMPTY schema, not an inference error. A
     // nonexistent path still errors (FileNotFound from the listing).
     val index = new GraftOrcFileIndex(
-      spark.sparkContext.hadoopConfiguration, ps, 32,
+      spark.sparkContext.hadoopConfiguration, ps,
       GraftOrcDataSource.snapshotSelector(options),
       GraftOrcDataSource.startSnapshotId(options),
       onRewrite = GraftOrcDataSource.onRewritePolicy(options))
@@ -715,13 +716,14 @@ class GraftOrcScanBuilder(dataSchema: StructType,
     with SupportsPushDownLimit
     with SupportsPushDownAggregates {
 
-  private val optionsMap = options.asCaseSensitiveMap().asScala.toMap
-  private[v2] val metaParallelism =
-    optionsMap.getOrElse("graft.meta_fetch_concurrency", "32").toInt
+  // Spark keeps each key's case as the user typed it: every lookup goes
+  // through this case-insensitive copy
+  private val optionsMap =
+    CaseInsensitiveMap(options.asCaseSensitiveMap().asScala.toMap)
 
   private[v2] lazy val fileIndex = new GraftOrcFileIndex(
     SparkSession.active.sparkContext.hadoopConfiguration,
-    GraftOrcDataSource.paths(options), metaParallelism,
+    GraftOrcDataSource.paths(options),
     GraftOrcDataSource.snapshotSelector(options),
     GraftOrcDataSource.startSnapshotId(options),
     onRewrite = GraftOrcDataSource.onRewritePolicy(options))
@@ -867,7 +869,7 @@ class GraftOrcScanBuilder(dataSchema: StructType,
     pushedAgg match {
       case Some((agg, aggSchema)) =>
         return new GraftOrcAggScan(dataFileSchema, partitionSchema, agg,
-          aggSchema, fileIndex, metaParallelism, optionsMap)
+          aggSchema, fileIndex, optionsMap)
       case None =>
     }
     val part = partitionSchema.fieldNames.map(_.toLowerCase).toSet
@@ -882,8 +884,8 @@ class GraftOrcScanBuilder(dataSchema: StructType,
     val readData = StructType(plain.filterNot(f => part(f.name.toLowerCase)))
     val readPart = StructType(plain.filter(f => part(f.name.toLowerCase)))
     lastBuiltScan = new GraftOrcScan(dataFileSchema, partitionSchema, readData, readPart,
-      partitionFilters, dataFilters, limit, fileIndex, metaParallelism,
-      optionsMap, metaFields, hiddenFilters)
+      partitionFilters, dataFilters, limit, fileIndex, optionsMap,
+      metaFields, hiddenFilters)
     lastBuiltScan
   }
 }
@@ -975,8 +977,8 @@ case class GraftOrcAggPackedPartition(files: Array[GraftOrcAggPartition])
 
 class GraftOrcAggScan(dataFileSchema: StructType, partitionSchema: StructType,
                       agg: Aggregation, aggSchema: StructType,
-                      index: GraftOrcFileIndex, metaParallelism: Int,
-                      options: Map[String, String])
+                      index: GraftOrcFileIndex,
+                      options: CaseInsensitiveMap[String])
     extends Scan with Batch {
 
   private def spark = SparkSession.active
@@ -1194,7 +1196,7 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
                    readDataSchema: StructType, readPartitionSchema: StructType,
                    partitionFilters: Array[Filter], dataFilters: Array[Filter],
                    limit: Option[Int], index: GraftOrcFileIndex,
-                   metaParallelism: Int, options: Map[String, String],
+                   options: CaseInsensitiveMap[String],
                    metadataFields: Array[
                      org.apache.spark.sql.types.StructField] = Array.empty,
                    hiddenFilters: Array[Filter] = Array.empty)
@@ -1472,10 +1474,9 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.expressions.Expressions
-    val optIn = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.preserve_partitioning") =>
-        GraftOrcDataSource.parseBooleanOption(
-          "graft.preserve_partitioning", v)
+    val optIn = options.get("graft.preserve_partitioning").map { v =>
+      GraftOrcDataSource.parseBooleanOption(
+        "graft.preserve_partitioning", v)
     }.getOrElse(false)
     if (!optIn ||
         (readPartitionSchema.fields.isEmpty && spjHiddenKeys.isEmpty))
@@ -1544,58 +1545,50 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     new GraftOrcMicroBatchStream(this,
       GraftOrcDataSource.paths(
         new CaseInsensitiveStringMap(options.asJava)),
-      spark.sparkContext.hadoopConfiguration, metaParallelism,
-      snapshotOffsets = options.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("graft.snapshot_offsets") =>
-          GraftOrcDataSource.parseBooleanOption("graft.snapshot_offsets", v)
+      spark.sparkContext.hadoopConfiguration,
+      snapshotOffsets = options.get("graft.snapshot_offsets").map { v =>
+        GraftOrcDataSource.parseBooleanOption("graft.snapshot_offsets", v)
       }.getOrElse(false),
       // branch-scoped streaming: tail the branch lineage (WAP audit loop)
-      branch = options.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("graft.branch") => v.trim
-      }.filter(_.nonEmpty),
+      branch = options.get("graft.branch").map(_.trim).filter(_.nonEmpty),
       // fresh-checkpoint seed for snapshot-offset streams: start the
       // feed AFTER an already-processed snapshot instead of replaying
       // the retained history
-      startSnapshotId = options.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("graft.stream.start_snapshot_id") =>
-          GraftOrcDataSource.parseLongOption(
-            "graft.stream.start_snapshot_id", v)
-      },
-      onRewrite = options.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("graft.stream.on_rewrite") =>
-          v.toLowerCase(java.util.Locale.ROOT)
+      startSnapshotId = options.get("graft.stream.start_snapshot_id")
+        .map(GraftOrcDataSource.parseLongOption(
+          "graft.stream.start_snapshot_id", _)),
+      onRewrite = options.get("graft.stream.on_rewrite").map { v =>
+        v.toLowerCase(java.util.Locale.ROOT)
       }.getOrElse("replay"),
-      maxFilesPerTrigger = options.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("maxFilesPerTrigger") =>
-          // fail fast on bad values: a raw NumberFormatException names
-          // nothing, and <= 0 would admit zero files every trigger — a
-          // silently stalled stream (mirrors FileStreamSource validation)
-          val n = try v.toInt catch {
+      maxFilesPerTrigger = options.get("maxFilesPerTrigger").map { v =>
+        // fail fast on bad values: a raw NumberFormatException names
+        // nothing, and <= 0 would admit zero files every trigger — a
+        // silently stalled stream (mirrors FileStreamSource validation)
+        val n = try v.toInt catch {
+          case _: NumberFormatException =>
+            throw new IllegalArgumentException(
+              s"Invalid value '$v' for option 'maxFilesPerTrigger', " +
+                "must be a positive integer")
+        }
+        if (n <= 0) throw new IllegalArgumentException(
+          s"Invalid value '$v' for option 'maxFilesPerTrigger', " +
+            "must be a positive integer")
+        n
+      },
+      maxBytesPerTrigger = options.get("maxBytesPerTrigger").map { v =>
+        // accepts size suffixes ("10m", "1g") like FileStreamSource
+        val n =
+          try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
+          catch {
             case _: NumberFormatException =>
               throw new IllegalArgumentException(
-                s"Invalid value '$v' for option 'maxFilesPerTrigger', " +
-                  "must be a positive integer")
+                s"Invalid value '$v' for option 'maxBytesPerTrigger', " +
+                  "must be a positive size (e.g. 10m, 1g)")
           }
-          if (n <= 0) throw new IllegalArgumentException(
-            s"Invalid value '$v' for option 'maxFilesPerTrigger', " +
-              "must be a positive integer")
-          n
-      },
-      maxBytesPerTrigger = options.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("maxBytesPerTrigger") =>
-          // accepts size suffixes ("10m", "1g") like FileStreamSource
-          val n =
-            try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-            catch {
-              case _: NumberFormatException =>
-                throw new IllegalArgumentException(
-                  s"Invalid value '$v' for option 'maxBytesPerTrigger', " +
-                    "must be a positive size (e.g. 10m, 1g)")
-            }
-          if (n <= 0) throw new IllegalArgumentException(
-            s"Invalid value '$v' for option 'maxBytesPerTrigger', " +
-              "must be a positive size (e.g. 10m, 1g)")
-          n
+        if (n <= 0) throw new IllegalArgumentException(
+          s"Invalid value '$v' for option 'maxBytesPerTrigger', " +
+            "must be a positive size (e.g. 10m, 1g)")
+        n
       })
 
   override def description(): String =
@@ -1640,7 +1633,7 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
 
   private lazy val footerSweep: (Seq[OrcFileEntry], Seq[FileFooter]) = {
     val files = selectedFiles
-    val footers = GraftOrcFileIndex.parallelMap(files, metaParallelism) { e =>
+    val footers = GraftOrcFileIndex.parallelMap(files) { e =>
       // manifest stat sidecar first: a snapshot entry written by the
       // graft-orc writer/compactor already carries this file's footer
       // statistics, so a 100k-file manifest table prices its row count
@@ -1707,10 +1700,10 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
 
   private def footerRows: Long = footerSweep._2.map(_.rows).sum
 
-  private lazy val columnStatsEnabled: Boolean = options.collectFirst {
-    case (k, v) if k.equalsIgnoreCase("graft.column_stats") =>
+  private lazy val columnStatsEnabled: Boolean =
+    options.get("graft.column_stats").map { v =>
       GraftOrcDataSource.parseBooleanOption("graft.column_stats", v)
-  }.getOrElse(true)
+    }.getOrElse(true)
 
   override def estimateStatistics(): Statistics = {
     val bytes = selectedFiles.map(_.length).sum
@@ -1856,7 +1849,7 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     val smallParts = small.map(e =>
       GraftOrcInputPartition(e.path, 0, e.length, partValues(e), e.length,
         partTypes, e.schemaV, e.mtime, hidRaw(e), hidCanon, hidSrcTypes))
-    val bigParts = GraftOrcFileIndex.parallelMap(big, metaParallelism) { e =>
+    val bigParts = GraftOrcFileIndex.parallelMap(big) { e =>
       val r = OrcFile.createReader(new Path(e.path), OrcFile.readerOptions(conf))
       val stripes =
         try r.getStripes.asScala.map(s => (s.getOffset, s.getLength)).toSeq
@@ -1885,17 +1878,6 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     (packSmall(smallParts, targetSplitBytes) ++ bigParts).toArray
   }
 
-  /** Bin-pack per-file partitions of SMALL files into shared tasks —
-    * the same sizing formula as Spark's own `FilePartition`
-    * (`min(maxPartitionBytes, max(openCost, total/defaultParallelism))`,
-    * every file padded by `spark.sql.files.openCostInBytes`), so small
-    * tables keep their parallelism while a million-small-file history
-    * scan stops paying one task launch + reader open PER FILE. Packs are
-    * order-preserving; under storage-partitioned joins
-    * (`graft.preserve_partitioning`) they are built per partition KEY so
-    * a pack's reported `partitionKey` stays exact.
-    * `graft.pack_small_files=false` restores one task per file.
-    */
   /** Streaming entry: pack one micro-batch's admitted files with the
     * same policy (crawl commits are the many-small-files case). Batch
     * membership is decided by OFFSETS, task granularity is free to
@@ -1908,11 +1890,21 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     packSmall(parts, targetSplitBytes).toArray
   }
 
+  /** Bin-pack per-file partitions of SMALL files into shared tasks —
+    * the same sizing formula as Spark's own `FilePartition`
+    * (`min(maxPartitionBytes, max(openCost, total/defaultParallelism))`,
+    * every file padded by `spark.sql.files.openCostInBytes`), so small
+    * tables keep their parallelism while a million-small-file history
+    * scan stops paying one task launch + reader open PER FILE. Packs are
+    * order-preserving; under storage-partitioned joins
+    * (`graft.preserve_partitioning`) they are built per partition KEY so
+    * a pack's reported `partitionKey` stays exact.
+    * `graft.pack_small_files=false` restores one task per file.
+    */
   private def packSmall(parts: Seq[GraftOrcInputPartition],
                         targetSplitBytes: Long): Seq[InputPartition] = {
-    val enabled = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.pack_small_files") =>
-        GraftOrcDataSource.parseBooleanOption("graft.pack_small_files", v)
+    val enabled = options.get("graft.pack_small_files").map { v =>
+      GraftOrcDataSource.parseBooleanOption("graft.pack_small_files", v)
     }.getOrElse(true)
     if (!enabled || parts.length <= 1) return parts
     val sqlConf = org.apache.spark.sql.internal.SQLConf.get
@@ -1923,10 +1915,9 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     val maxSplit = math.min(
       math.min(targetSplitBytes, sqlConf.filesMaxPartitionBytes),
       math.max(openCost, totalBytes / math.max(1, minParts)))
-    val spjOn = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.preserve_partitioning") =>
-        GraftOrcDataSource.parseBooleanOption(
-          "graft.preserve_partitioning", v)
+    val spjOn = options.get("graft.preserve_partitioning").map { v =>
+      GraftOrcDataSource.parseBooleanOption(
+        "graft.preserve_partitioning", v)
     }.getOrElse(false) &&
       (readPartitionSchema.fields.nonEmpty || spjHiddenKeys.nonEmpty)
     val groups: Iterator[Seq[GraftOrcInputPartition]] =
@@ -1979,18 +1970,16 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     // garbage file must not kill a 100 TB scan when the user opts in.
     // Session conf supplies the default (Spark's own file sources read the
     // same flag); the per-read option overrides it.
-    val ignoreCorrupt = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("ignoreCorruptFiles") =>
-        GraftOrcDataSource.parseBooleanOption("ignoreCorruptFiles", v)
+    val ignoreCorrupt = options.get("ignoreCorruptFiles").map { v =>
+      GraftOrcDataSource.parseBooleanOption("ignoreCorruptFiles", v)
     }.getOrElse(
       spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false").toBoolean)
     // row-level (UPDATE/MERGE) scans: data filters prune FILES (group
     // granularity) during planning but must not reach the reader — a
     // SARG-skipped stripe inside a surviving file would silently drop
     // its rows from the group rewrite
-    val rowLevelScan = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.row_level_scan") =>
-        v.trim.toBoolean
+    val rowLevelScan = options.get("graft.row_level_scan").map { v =>
+      v.trim.toBoolean
     }.getOrElse(false)
     // equality deletes force-read their key columns when the query did
     // not project them; the row wrapper drops the forced columns before
@@ -1999,14 +1988,14 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     // per-task key-tuple budget: fail the scan with a typed
     // "purge required" error instead of an executor OOM when sidecars
     // have accumulated past what a task can hold in memory
-    val eqBudgetRows: Long = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.eq_delete_budget_rows") =>
+    val eqBudgetRows: Long =
+      options.get("graft.eq_delete_budget_rows").map { v =>
         try v.trim.toLong
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(
             s"graft-orc: graft.eq_delete_budget_rows must be a long, " +
               s"got '$v'") }
-    }.getOrElse(GraftOrcEqDelete.DefaultBudgetRows)
+      }.getOrElse(GraftOrcEqDelete.DefaultBudgetRows)
     val forcedEq: Array[org.apache.spark.sql.types.StructField] =
       if (!eqActive) Array.empty
       else eqKeyFields.filterNot(f =>

@@ -60,7 +60,6 @@ case class OrcFileEntry(path: String, length: Long,
   *    sequential RPCs.
   */
 class GraftOrcFileIndex(conf: Configuration, roots: Seq[String],
-                        parallelism: Int,
                         snapshot: Option[GraftOrcManifest.Selector] = None,
                         changesFromSnapshot: Option[Long] = None,
                         ignoreManifest: Boolean = false,
@@ -218,7 +217,7 @@ class GraftOrcFileIndex(conf: Configuration, roots: Seq[String],
     }
     while (frontier.nonEmpty) {
       val listed: Seq[(Seq[FileStatus], Map[String, String])] =
-        GraftOrcFileIndex.parallelMap(frontier, parallelism) {
+        GraftOrcFileIndex.parallelMap(frontier) {
           case (dir, parts) =>
             (dir.getFileSystem(conf).listStatus(dir).toSeq, parts)
         }
@@ -300,14 +299,21 @@ object GraftOrcFileIndex {
     sb.toString
   }
 
-  /** Bounded-parallelism map over driver-side metadata items (listing
-    * waves, footer reads). Propagates the first failure; always tears the
-    * pool down.
+  /** Concurrent metadata requests (listing waves, footer reads) per
+    * [[parallelMap]] — one bound for every caller, like the reference's
+    * `meta_fetch_concurrency` (src/file_format.rs:146-155).
     */
-  def parallelMap[A, B](items: Seq[A], parallelism: Int)(f: A => B): Seq[B] = {
+  private val MetaParallelism = 32
+
+  /** Bounded-parallelism map over driver-side metadata items (listing
+    * waves, footer reads): at most [[MetaParallelism]] at once.
+    * Propagates the first failure; always tears the pool down.
+    */
+  def parallelMap[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.isEmpty) return Nil
-    if (items.length == 1 || parallelism <= 1) return items.map(f)
-    val pool = Executors.newFixedThreadPool(math.min(parallelism, items.length))
+    if (items.length == 1) return items.map(f)
+    val pool = Executors.newFixedThreadPool(
+      math.min(MetaParallelism, items.length))
     try {
       val futures = items.map(a => pool.submit(new Callable[B] {
         override def call(): B = f(a)

@@ -1276,7 +1276,7 @@ object GraftOrcManifest {
   private def deleteFiles(fs: FileSystem, table: Path,
                           victims: Seq[OrcFileEntry]): Unit = {
     if (victims.isEmpty) return
-    GraftOrcFileIndex.parallelMap(victims, 32) { e =>
+    GraftOrcFileIndex.parallelMap(victims) { e =>
       try fs.delete(new Path(e.path), false)
       catch { case _: java.io.IOException => false }
     }
@@ -1732,7 +1732,7 @@ object GraftOrcManifest {
         Dir)
     val live = retainedPaths(fs, qt)
     // manifest-blind BFS: list what's physically visible on disk
-    val visible = new GraftOrcFileIndex(conf, Seq(table), 32,
+    val visible = new GraftOrcFileIndex(conf, Seq(table),
       ignoreManifest = true).entries
     // delete sidecars live under `_graft_deletes/` which the BFS skips
     // (`_` prefix) — sweep crashed MoR-delete leftovers explicitly

@@ -44,7 +44,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * keep offsets trivially replayable.
   */
 class GraftOrcMicroBatchStream(scan: GraftOrcScan, paths: Seq[String],
-                               conf: Configuration, metaParallelism: Int,
+                               conf: Configuration,
                                maxFilesPerTrigger: Option[Int] = None,
                                maxBytesPerTrigger: Option[Long] = None,
                                snapshotOffsets: Boolean = false,
@@ -59,7 +59,7 @@ class GraftOrcMicroBatchStream(scan: GraftOrcScan, paths: Seq[String],
   // after the fork never enter the feed
   private def listing(): Seq[OrcFileEntry] =
     scan.pruneEntries(
-      new GraftOrcFileIndex(conf, paths, metaParallelism,
+      new GraftOrcFileIndex(conf, paths,
         snapshot = branch.map(GraftOrcManifest.Selector.ByBranch(_))).entries,
       scan.staticPartitionFilters)
       .sortBy(e => (e.mtime, e.path))

@@ -507,7 +507,7 @@ object GraftOrcSchema {
   private def bootstrapMeta(conf: Configuration, table: String)
       : GraftOrcManifest.TableMeta = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val index = new GraftOrcFileIndex(conf, Seq(table), 32)
+    val index = new GraftOrcFileIndex(conf, Seq(table))
     val schema =
       if (index.entries.isEmpty) new StructType()
       else graft.sources.OrcTables.inferSchema(spark, index, ignoreCorrupt = false)

@@ -464,7 +464,7 @@ object GraftOrcWrite {
     val spark = SparkSession.active
     val index = try {
       new GraftOrcFileIndex(
-        spark.sparkContext.hadoopConfiguration, Seq(table), 32)
+        spark.sparkContext.hadoopConfiguration, Seq(table))
     } catch { case _: java.io.FileNotFoundException => return }
     val existing =
       try index.entries
@@ -609,7 +609,7 @@ object GraftOrcWrite {
     seededTables.synchronized {
       if (seededTables.contains(table)) return
       val maxPublished =
-        try new GraftOrcFileIndex(conf, Seq(table), 32)
+        try new GraftOrcFileIndex(conf, Seq(table))
           .entries.foldLeft(0L)((m, e) => math.max(m, e.mtime))
         catch {
           // genuinely nothing published yet
@@ -736,7 +736,7 @@ object GraftOrcWrite {
     val priorEntries: Seq[OrcFileEntry] =
       if (truncateExisting || !manifestActive) Nil
       else manifestBefore.map(_.entries).getOrElse(
-        new GraftOrcFileIndex(conf, Seq(table), 32).entries)
+        new GraftOrcFileIndex(conf, Seq(table)).entries)
     // persisted table metadata (schema evolution, [[GraftOrcSchema]]):
     // carried forward on append/replace/delta; REPLACED on a truncate
     // whose schema differs (overwrite-with-new-schema — old retained
@@ -776,7 +776,7 @@ object GraftOrcWrite {
     val truncateVictims: Seq[OrcFileEntry] =
       if (!truncateExisting || !manifestActive) Nil
       else manifestBefore.map(s => s.entries ++ s.deletes).getOrElse(
-        new GraftOrcFileIndex(conf, Seq(table), 32).entries)
+        new GraftOrcFileIndex(conf, Seq(table)).entries)
     if (truncateExisting) {
       // GC staging subtrees orphaned by crashed drivers (dropStaging only
       // removes a write's OWN subtree, so a driver that died before
@@ -871,7 +871,7 @@ object GraftOrcWrite {
       // listing yields staged lengths for the manifest (by unique file
       // name), so the manifest costs no extra metadata RPCs.
       val stagedLen: Map[String, Long] =
-        GraftOrcFileIndex.parallelMap(bySuffix, 32) { case (suffix, files) =>
+        GraftOrcFileIndex.parallelMap(bySuffix) { case (suffix, files) =>
           val src = if (suffix.isEmpty) stagingSub else new Path(stagingSub, suffix)
           val keep = files.map(_.getName).toSet
           val (keepSt, orphans) =
@@ -883,7 +883,7 @@ object GraftOrcWrite {
       // with suffix groups contiguous in wave-rename order
       val stamped = bySuffix.flatMap(_._2.sortBy(_.getName))
         .map(p => p -> nextPublishStamp())
-      GraftOrcFileIndex.parallelMap(stamped, 32) { case (p, t) =>
+      GraftOrcFileIndex.parallelMap(stamped) { case (p, t) =>
         fs.setTimes(p, t, -1)
       }
       val stampOf: Map[String, Long] =

@@ -37,6 +37,15 @@ import graft.functions.TextHashFunctions.md5Key60
   */
 object IngestDedup {
 
+  /** Fingerprint-bucket column: the deterministic function of `fp` that
+    * makes the clean table's layout PRUNABLE. Spark `hash` = murmur3
+    * seed 42, the same function the hidden `bucket(n, col)` transform
+    * uses — but materialized as an identity-partitioned column so the
+    * MERGE's ON clause can name it.
+    */
+  def fpBucket(n: Int): Column =
+    pmod(hash(col("fp")), lit(n)).cast("int")
+
   /** Run one ingestion pass: stream every unconsumed crawl commit into
     * `cleanTable`, then stop. Re-invoking with the same `checkpoint`
     * resumes past consumed commits (restart safety); re-invoking with a
@@ -51,17 +60,7 @@ object IngestDedup {
     *   defaults to the oracle-reproducible md5-60 of `text` (swap in
     *   `xxhash64` for engine-internal speed, or a normalized form for
     *   near-exact policies).
-    */
-  /** Fingerprint-bucket column: the deterministic function of `fp` that
-    * makes the clean table's layout PRUNABLE. Spark `hash` = murmur3
-    * seed 42, the same function the hidden `bucket(n, col)` transform
-    * uses — but materialized as an identity-partitioned column so the
-    * MERGE's ON clause can name it.
-    */
-  def fpBucket(n: Int): Column =
-    pmod(hash(col("fp")), lit(n)).cast("int")
-
-  /** @param buckets when set, the clean table is expected to carry an
+    * @param buckets when set, the clean table is expected to carry an
     *   `fpb INT` identity-partition column (`PARTITIONED BY (fpb)`,
     *   value `fpBucket(n)`). Each batch then computes its winners'
     *   bucket set (a driver collect BOUNDED BY `n`, never by data) and
@@ -109,8 +108,8 @@ object IngestDedup {
     * Documents with a NULL fingerprint (null text) are dropped — a null
     * key can never match and would re-insert on every delivery.
     * Exposed for the batch twin in specs.
-    */
-  /** @param onMerge observation hook invoked with each executed MERGE
+    *
+    * @param onMerge observation hook invoked with each executed MERGE
     *   statement's result frame (its executedPlan carries the target
     *   scan's metrics — GraftOrcMergePruneSpec reads `graftFilesRead`
     *   off it). Must not re-execute the frame.

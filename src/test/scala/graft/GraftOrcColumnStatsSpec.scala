@@ -134,7 +134,7 @@ class GraftOrcColumnStatsSpec extends AnyFunSuite {
     GraftOrcDataSource.recordPlanFooterReads = true
     try {
       val ignoreManifest = new graft.sources.v2.GraftOrcFileIndex(
-        spark.sparkContext.hadoopConfiguration, Seq(dir), 32,
+        spark.sparkContext.hadoopConfiguration, Seq(dir),
         ignoreManifest = true)
       assert(ignoreManifest.entries.nonEmpty &&
         ignoreManifest.entries.forall(_.stats.isEmpty),

@@ -101,7 +101,7 @@ class GraftOrcSchemaInferenceSpec extends AnyFunSuite {
     older.coalesce(1).write.format("graft-orc")
       .option("graft.manifest", "true").mode("overwrite").save(dir)
     val index = new graft.sources.v2.GraftOrcFileIndex(
-      spark.sparkContext.hadoopConfiguration, Seq(dir), 8)
+      spark.sparkContext.hadoopConfiguration, Seq(dir))
     assert(index.tableMeta.isEmpty, "fixture must be a meta-less manifest table")
     val (_, appendJobs) = jobsDuring {
       older.coalesce(1).write.format("graft-orc")

@@ -362,6 +362,31 @@ class GraftOrcSourceSpec extends AnyFunSuite {
     assert(q.count() === builtin.filter($"l_quantity" > 40).count())
   }
 
+  test("scan options are case-insensitive: a mixed-case " +
+    "orc.pushdown_predicate=false pushes no data filter, a mixed-case " +
+    "graft.split_size splits a multi-stripe file") {
+    def scanDesc(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.description()
+      }.head
+    val filtered = spark.read.format("graft-orc")
+      .option("ORC.Pushdown_Predicate", "false").load(orcPath)
+      .filter($"l_quantity" > 40)
+    assert(scanDesc(filtered).contains("dataFilters=[]"), scanDesc(filtered))
+    assert(!scanDesc(v2.filter($"l_quantity" > 40)).contains("dataFilters=[]"))
+    assert(filtered.count() === builtin.filter($"l_quantity" > 40).count())
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-case").toString
+    graft.sources.OrcTables.writeTuned(
+      Tables.lineitem(spark, TestSpark.sf0001).coalesce(1), dir,
+      stripeSizeBytes = Some(65536))
+    def parts(df: org.apache.spark.sql.DataFrame) = df.rdd.getNumPartitions
+    assert(parts(spark.read.format("graft-orc").load(dir)) === 1)
+    assert(parts(spark.read.format("graft-orc")
+      .option("Graft.Split_Size", "65536").load(dir)) > 1)
+  }
+
   test("schema evolution: a column added by newer files reads as NULL " +
     "from older files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-evolve")

@@ -231,7 +231,7 @@ class GraftOrcStreamReadSpec extends AnyFunSuite {
   test("offsets serialize and deserialize losslessly") {
     import graft.sources.v2.{GraftOrcSnapshotOffset, GraftOrcStreamOffset}
     val stream = new graft.sources.v2.GraftOrcMicroBatchStream(
-      null, Nil, spark.sparkContext.hadoopConfiguration, 4)
+      null, Nil, spark.sparkContext.hadoopConfiguration)
     val o = GraftOrcStreamOffset(1234L, "/x/a b/part-0.orc")
     assert(stream.deserializeOffset(o.json()) === o)
     val so = GraftOrcSnapshotOffset(7L)

@@ -19,6 +19,10 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("every QueryDef registers under its own name") {
+    assert(SparkEntry.queries.size == SparkEntry.modules.size)
+  }
+
   test("every oracle key matches a query key") {
     val qk = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(qk))

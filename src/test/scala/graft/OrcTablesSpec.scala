@@ -84,7 +84,7 @@ class OrcTablesSpec extends AnyFunSuite {
     val region = spark.read.parquet(s"${TestSpark.sf0001}/region.parquet")
     OrcTables.write(region.coalesce(1), s"$dir/k1=a/k2=b/k3=c/k4=d/k5=e/data.orc")
     val idx = new graft.sources.v2.GraftOrcFileIndex(
-      spark.sparkContext.hadoopConfiguration, Seq(dir), 8)
+      spark.sparkContext.hadoopConfiguration, Seq(dir))
     assert(idx.partitionColumnNames === Seq("k1", "k2", "k3", "k4", "k5"))
   }
 
