@@ -35,24 +35,8 @@ object CatalogOps {
       col("c_acctbal").as("bal"),
       (col("c_custkey") % 100).cast("int").as("score"))
 
-  private val tempDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.io.File]())
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    tempDirs.forEach { dir =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir.toPath).iterator().asScala.toSeq
-          .reverse.foreach(p => p.toFile.delete())
-      } catch { case _: Throwable => () }
-    }))
-
-  private def freshDir(tag: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-cat-$tag").toString
-    tempDirs.add(new java.io.File(dir))
-    dir
-  }
+  private def freshDir(tag: String): String =
+    TempDirs.create(s"graft-cat-$tag")
 
   /** One warehouse per JVM (Spark caches catalog instances with their
     * init-time options, so the warehouse cannot rotate per query);
@@ -731,8 +715,9 @@ object CatalogOps {
           "bal DOUBLE) TBLPROPERTIES('graft.delete_mode'='mor'," +
           "'graft.update_mode'='mor'," +
           "'graft.manifest.retain'='10')")
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-feed-branch").toString + "/seq"
+        // the frames never read the checkpoint (only feed() does)
+        val ckptDir = TempDirs.create("graft-feed-branch")
+        val ckpt = ckptDir + "/seq"
         try {
           s.sql(s"INSERT INTO $qt SELECT /*+ REPARTITION(4) */ * " +
             s"FROM $srcView")
@@ -764,7 +749,10 @@ object CatalogOps {
               col("_change_type"),
               (col("_change_seq") - lit(forkSeq)).as("step"))
             .orderBy(col("step"), col("_change_type"), col("c_custkey"))
-        } finally s.catalog.dropTempView(srcView)
+        } finally {
+          s.catalog.dropTempView(srcView)
+          TempDirs.remove(ckptDir)
+        }
       },
       Some("""WITH seeded AS (
              |  SELECT c_custkey, c_mktsegment AS seg, c_acctbal AS bal

@@ -44,30 +44,13 @@ object RowLevelOps {
       |  CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_acctbal END AS bal
       |FROM customer""".stripMargin
 
-  /** Single-use table dirs, swept at JVM exit — repeated bench/verify
-    * iterations must not accumulate table copies under tmpdir.
-    */
-  private val tempDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.io.File]())
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    tempDirs.forEach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d.toPath).iterator().asScala.toSeq
-          .reverse.foreach(p => p.toFile.delete())
-      } catch { case _: Throwable => () }
-    }))
-
   /** Write `src` as a fresh manifest table and register it under a
     * run-unique catalog name; returns (dir, tableName).
     */
   private def freshTable(s: SparkSession, src: DataFrame, tag: String,
                          tblProps: String = "", retain: Int = 3)
       : (String, String) = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-rl-$tag").toString
-    tempDirs.add(new java.io.File(dir))
+    val dir = TempDirs.create(s"graft-rl-$tag")
     src.repartition(4).write.format("graft-orc")
       .option("graft.manifest", "true")
       .option("graft.manifest.retain", retain.toString)
@@ -306,9 +289,7 @@ object RowLevelOps {
     QueryDef("rl_upsert_hidden",
       (s, d) => {
         val (target, src) = upsertSides(s, d)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-rl-upsh").toString
-        tempDirs.add(new java.io.File(dir))
+        val dir = TempDirs.create("graft-rl-upsh")
         target.repartition(4)
           .write.format("graft-orc")
           .option("graft.manifest", "true")
@@ -362,17 +343,20 @@ object RowLevelOps {
     // twice, none skipped, across independent polls.
     cdcDef("rl_cdc_feed", "cdcf", "update_preimage", "update_postimage") {
       (s, dir, appendSeq4) =>
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-feed").toString + "/seq"
-        val f1 = graft.sources.v2.GraftOrcChangelog.feed(
-          s, dir, ckpt, pairKeys = Seq("c_custkey"),
-          initialSeq = 1L).get
-        f1.commit()
-        appendSeq4()
-        val f2 = graft.sources.v2.GraftOrcChangelog.feed(
-          s, dir, ckpt, pairKeys = Seq("c_custkey")).get
-        f2.commit()
-        f1.df.unionByName(f2.df)
+        // the frames never read the checkpoint (only feed() does)
+        val ckptDir = TempDirs.create("graft-feed")
+        val ckpt = ckptDir + "/seq"
+        try {
+          val f1 = graft.sources.v2.GraftOrcChangelog.feed(
+            s, dir, ckpt, pairKeys = Seq("c_custkey"),
+            initialSeq = 1L).get
+          f1.commit()
+          appendSeq4()
+          val f2 = graft.sources.v2.GraftOrcChangelog.feed(
+            s, dir, ckpt, pairKeys = Seq("c_custkey")).get
+          f2.commit()
+          f1.df.unionByName(f2.df)
+        } finally TempDirs.remove(ckptDir)
     },
 
     // ------------------------------------- write-audit-publish (branch)

@@ -45,6 +45,11 @@ object GraftOrcChangelog {
   val ChangeTypeCol = "_change_type"
   val ChangeSeqCol = "_change_seq"
 
+  /** Largest estimated decoded size of a sidecar set's (file, pos)
+    * pairs that [[between]] hints as a broadcast build side.
+    */
+  private val PairsBroadcastBytes = 32L << 20
+
   /** Table property naming the row-identity key columns (comma-
     * separated) — the Iceberg "identifier fields" analogue. When set,
     * [[between]] with `pairUpdates = true` resolves it automatically.
@@ -234,8 +239,8 @@ object GraftOrcChangelog {
     def eqOnly(sidecars: Seq[OrcFileEntry]): Seq[OrcFileEntry] =
       sidecars.filter(e => GraftOrcEqDelete.isEqualitySidecar(e.path))
 
-    // (absolute file, position) pairs of a POSITION sidecar set — both
-    // encodings (ORC rows and deletion vectors) via GraftOrcMor.pairsDF.
+    // (absolute file, position) pairs of a POSITION sidecar set — its
+    // deletion vectors decoded via GraftOrcMor.pairsDF.
     // Deliberate size-informed broadcast (guide §3.1): the manifest
     // already KNOWS the sidecar byte sizes, so when the set is small —
     // the overwhelmingly common commit-bounded case — hint broadcast on
@@ -247,22 +252,16 @@ object GraftOrcChangelog {
     // the planner's choice — the hint never risks an oversized build.
     //
     // The threshold gates the ESTIMATED DECODED pair bytes, not the
-    // on-disk bytes (r22, from r21 advice): the broadcast builds a
-    // decoded (path string, pos) hash relation at ~64 bytes per pair,
-    // and the encodings expand very differently — a dense deletion
-    // vector packs up to 8 positions per payload byte (65536 ordinals
-    // in an 8 KB bitmap container), so dv-*.bin bytes are charged x512
-    // (8 pairs/byte x 64 B/pair); row-ORC sidecars hold ~8-16
-    // compressed bytes per pair, charged x8. A <=32 MB DV set that
-    // would decode to gigabytes now keeps the planner's choice instead
-    // of OOMing the driver.
-    val pairsBroadcastBytes = conf.getLong(
-      "graft.cdc.broadcast_pairs_bytes", 32L << 20)
+    // on-disk bytes: the broadcast builds a decoded (path string, pos)
+    // hash relation at ~64 bytes per pair, and a dense deletion vector
+    // packs up to 8 positions per payload byte (65536 ordinals in an
+    // 8 KB bitmap container), so sidecar bytes are charged x512
+    // (8 pairs/byte x 64 B/pair). A small DV set that would decode to
+    // gigabytes keeps the planner's choice instead of a broadcast build
+    // of that size.
     def decodedPairBytes(pos: Seq[OrcFileEntry]): Long =
-      pos.map { e =>
-        if (GraftOrcDeleteVector.isBitmapSidecar(e.path)) e.length * 512L
-        else e.length * 8L
-      }.sum
+      pos.map(_.length * 512L).sum
+
     // NO distinct on the pairs (r22, measured: one full hash exchange
     // per sidecar set, several per feed plan): every consumer is a
     // LEFT ANTI ([[minusPairs]]) or LEFT SEMI (delete images) against
@@ -274,7 +273,7 @@ object GraftOrcChangelog {
         val pairs = df.select(
           concat(lit(prefix), col("f")).as("__cdc_dfile"),
           col("pos").as("__cdc_dpos"))
-        if (decodedPairBytes(pos) <= pairsBroadcastBytes)
+        if (decodedPairBytes(pos) <= PairsBroadcastBytes)
           broadcast(pairs)
         else pairs
       }

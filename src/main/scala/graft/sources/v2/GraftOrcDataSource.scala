@@ -298,6 +298,13 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   override def schema(): StructType = tableSchema
 
+  // keyed property lookups ignore key case (TBLPROPERTIES keep the case
+  // the user typed); walks over every key read `props` itself
+  private val opts = CaseInsensitiveMap(props)
+
+  private lazy val consolidateAfter: Option[Int] =
+    opts.get("graft.consolidate_after").map(GraftOrcMor.parseConsolidateAfter)
+
   /** Enforced CHECK constraints (`ALTER TABLE ... ADD CONSTRAINT ck
     * CHECK (...)` — the catalog advertises SUPPORT_TABLE_CONSTRAINT and
     * persists each as a `graft.constraint.<name>` table property):
@@ -352,7 +359,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
   // none)
   override def partitioning(): Array[Transform] = partTransforms
   override def name(): String =
-    "graft-orc:" + props.getOrElse("path", props.getOrElse("paths", "?"))
+    "graft-orc:" + opts.getOrElse("path", opts.getOrElse("paths", "?"))
   // SHOW TBLPROPERTIES / DESCRIBE EXTENDED read these; catalog tables
   // carry their persisted TBLPROPERTIES here (path rides along, which
   // is also what makes DESCRIBE show the location)
@@ -401,7 +408,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
         "graft.snapshot_id", "graft.as_of_timestamp", "graft.tag",
         "graft.branch", "graft.preserve_partitioning")
       .foreach { k =>
-      if (!options.containsKey(k)) props.get(k).foreach(v => merged.put(k, v))
+      if (!options.containsKey(k)) opts.get(k).foreach(v => merged.put(k, v))
     }
     new CaseInsensitiveStringMap(merged)
   }
@@ -424,7 +431,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
     // operation against the BRANCH lineage: its scan reads the branch
     // state and its commit swaps/deltas against the same branch — WAP
     // can stage destructive changes and gate them before fast_forward
-    val branch = props.get("graft.branch").map(_.trim).filter(_.nonEmpty)
+    val branch = opts.get("graft.branch").map(_.trim).filter(_.nonEmpty)
     val partCols = partTransforms
       .map(t => GraftOrcPartitionSpec.fromTransform(t).canonical).toSeq
     // strategy per command: `cow` (default) plans the group-based
@@ -439,30 +446,13 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
       case Command.MERGE => "merge_mode"
       case _ => "delete_mode"
     })
-    // MoR deltas honor the table's sidecar encoding choice like the
-    // SupportsDelete path (deletion vectors by default)
-    val sideFmt = props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.delete_sidecar_format") => v
-    }.getOrElse(SparkSession.active.conf.get(
-      "spark.graft.delete_sidecar_format", "bitmap"))
-      .trim.toLowerCase(java.util.Locale.ROOT)
-    require(sideFmt == "bitmap" || sideFmt == "orc",
-      s"graft-orc: invalid value '$sideFmt' for " +
-        "graft.delete_sidecar_format, must be bitmap or orc")
-    val consolidateAfter = props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.consolidate_after") =>
-        GraftOrcMor.parseConsolidateAfter(v)
-    }
     // same knob as the batch write: MoR delta inserts cluster by the
     // partition columns when the table opts in
-    val distMode = props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.distribution_mode") =>
-        v.trim.toLowerCase(java.util.Locale.ROOT)
-    }.getOrElse("none")
-    val writeSort = props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("graft.write_sort") =>
-        v.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    }.getOrElse(Nil)
+    val distMode = opts.get("graft.distribution_mode")
+      .map(_.trim.toLowerCase(java.util.Locale.ROOT)).getOrElse("none")
+    val writeSort = opts.get("graft.write_sort")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Nil)
     // orc.* writer conf (bloom filters, stride, ...) as table defaults,
     // like the batch write's props-as-options ride-through
     val orcOpts = props.filter(_._1.toLowerCase(java.util.Locale.ROOT)
@@ -470,7 +460,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
     () =>
       if (mode == "mor")
         new GraftOrcDeltaOperation(tableSchema, ps.head, partCols,
-          info.command(), branch, sideFmt, consolidateAfter, distMode,
+          info.command(), branch, consolidateAfter, distMode,
           writeSort, orcOpts)
       else new GraftOrcRowLevelOperation(tableSchema, ps.head, partCols,
         info.command(), branch)
@@ -481,9 +471,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
     * default.
     */
   private def rowLevelMode(key: String): String = {
-    val m = props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase(s"graft.$key") => v
-    }.getOrElse(
+    val m = opts.getOrElse(s"graft.$key",
       SparkSession.active.conf.get(s"spark.graft.$key", "cow"))
       .trim.toLowerCase(java.util.Locale.ROOT)
     require(m == "cow" || m == "mor",
@@ -509,7 +497,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
   // instead of running a wrong delete.
 
   private def tablePaths: Seq[String] =
-    Seq("path", "paths", "location").flatMap(props.get).distinct
+    Seq("path", "paths", "location").flatMap(opts.get).distinct
 
   private def deleteTarget: (FileSystem, Path) = {
     val ps = tablePaths
@@ -595,7 +583,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
     // a branch handle deletes against the BRANCH lineage: classification
     // reads the branch state, the swap commits to the same lineage —
     // main never sees the staged delete until fast_forward
-    val branch = props.get("graft.branch").map(_.trim).filter(_.nonEmpty)
+    val branch = opts.get("graft.branch").map(_.trim).filter(_.nonEmpty)
     val cur = GraftOrcManifest.readSnapshot(fs, qt, branch)
       .getOrElse(GraftOrcManifest.Snapshot(0L, Nil))
     // conjunction classification per file
@@ -612,21 +600,12 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
         "graft-orc: deleteWhere offered an untranslatable filter " +
           "canDeleteWhere should have refused"))
     if (deleteMode == "mor") {
-      // merge-on-read: partial files gain position sidecars, nothing is
-      // rewritten; full drops stay metadata-only. Existing sidecars
-      // carry forward (a second MoR delete stacks).
-      // sidecar encoding: deletion vectors by default (GraftOrcDeleteVector
-      // — per-file bitmaps behind a header index); the row-ORC form via
-      // TBLPROPERTIES('graft.delete_sidecar_format'='orc') or the session
-      // conf, e.g. for tooling that inspects sidecars as tables
-      val sideFmt = props.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("graft.delete_sidecar_format") => v
-      }.getOrElse(SparkSession.active.conf.get(
-        "spark.graft.delete_sidecar_format", "bitmap"))
-        .trim.toLowerCase(java.util.Locale.ROOT)
+      // merge-on-read: partial files gain deletion-vector sidecars
+      // (GraftOrcDeleteVector — per-file bitmaps behind a header index),
+      // nothing is rewritten; full drops stay metadata-only. Existing
+      // sidecars carry forward (a second MoR delete stacks).
       val sidecars = GraftOrcMor.writeDeletes(
-        SparkSession.active, fs, qt, partials, pred, tableSchema,
-        format = sideFmt)
+        SparkSession.active, fs, qt, partials, pred, tableSchema)
       // expectPresent: every file this DELETE classified must still be
       // live at commit — a concurrent compact/rewrite that replaced one
       // would make its positions inert (silently losing the delete) or
@@ -637,10 +616,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
       GraftOrcManifest.deleteUnreferenced(fs, qt, fullDrops)
       // graft.consolidate_after: keep the live sidecar count bounded
       GraftOrcMor.maybeAutoConsolidate(SparkSession.active, fs, qt, branch,
-        explicit = props.collectFirst {
-          case (k, v) if k.equalsIgnoreCase("graft.consolidate_after") =>
-            GraftOrcMor.parseConsolidateAfter(v)
-        })
+        explicit = consolidateAfter)
     } else {
       val rewritten = GraftOrcDelete.rewriteWithout(
         SparkSession.active, fs, qt, partials, pred, tableSchema,
@@ -673,8 +649,7 @@ class GraftOrcTable(tableSchema: StructType, props: Map[String, String],
       "graft.max_open_writers")
     val toAdd = propDefaults.flatMap { k =>
       if (info.options().containsKey(k)) None
-      else props.collectFirst {
-        case (pk, v) if pk.equalsIgnoreCase(k) => k -> v }
+      else opts.get(k).map(k -> _)
     } ++
       // `orc.*` TBLPROPERTIES (bloom filters, stride, ...) are writer
       // defaults the same way — the write path already forwards any

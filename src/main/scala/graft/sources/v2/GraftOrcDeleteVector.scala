@@ -5,18 +5,15 @@ import java.io.{DataInputStream, DataOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Bitmap position-delete sidecars — the Iceberg-v3 deletion-vector
-  * direction (Puffin-shaped), applied to graft's merge-on-read DELETE.
+/** Position-delete sidecars of graft's merge-on-read DELETE — the
+  * Iceberg-v3 deletion-vector encoding (Puffin-shaped), and the only
+  * position encoding: `dv-*.bin` under `_graft_deletes/` (equality
+  * sidecars are `e-*.orc`).
   *
-  * The row-oriented ORC `(f, pos)` sidecar pays per deleted row on BOTH
-  * sides of its life: 8+ bytes of storage plus the file-path bytes per
-  * position, and at scan time every task decodes EVERY sidecar row just
-  * to find its own file's positions. A deletion vector stores one
-  * COMPRESSED BITMAP of deleted ordinals per data file behind a header
-  * index, so a task seeks directly to its file's payload and a dense
-  * delete costs ~1 bit per row instead of ~20 bytes. The ORC form stays
-  * fully supported (the delta write path still emits it; readers accept
-  * both mixed freely) — this module only adds the cheaper encoding.
+  * A deletion vector stores one COMPRESSED BITMAP of deleted ordinals
+  * per data file behind a header index, so a scan task seeks directly
+  * to its file's payload instead of decoding every deleted position of
+  * the table, and a dense delete costs ~1 bit per row.
   *
   * Container design (roaring, reimplemented — no dependency): positions
   * partition by `pos >>> 16`; each 65536-ordinal chunk is either a
@@ -29,17 +26,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * File layout (version in the magic): `GRDV1` then repeated entries
   * `[relPathUtf][payloadLen][payload]` with a zero-length path as the
   * terminator. The header walk (skipping payloads) is the per-task
-  * index read; `bitmapFor` decodes only the target file's payload.
+  * index read; `bitmapFor` decodes only the target file's payload. Any
+  * other file — such as a row-ORC `d-*.orc` sidecar an older release
+  * wrote — fails the magic check with an IOException naming it, so a
+  * read never silently skips a delete.
   */
 object GraftOrcDeleteVector {
 
   private val Magic: Array[Byte] = "GRDV1".getBytes("UTF-8")
-
-  /** Deletion-vector sidecars are `dv-*.bin` under `_graft_deletes/`
-    * (position-ORC sidecars are `d-*.orc`, equality `e-*.orc`).
-    */
-  def isBitmapSidecar(path: String): Boolean =
-    path.substring(path.lastIndexOf('/') + 1).startsWith("dv-")
 
   /** Sparse-or-dense 16-bit container. */
   private final class Container {

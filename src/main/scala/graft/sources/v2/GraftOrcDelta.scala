@@ -2,24 +2,17 @@ package graft.sources.v2
 
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.execution.datasources.orc.GraftOrcShims
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Delta-based (merge-on-read) row-level operations — `UPDATE`, `MERGE
   * INTO`, and the non-metadata `DELETE` fallback — via DSv2
@@ -66,7 +59,6 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftOrcDeltaOperation(tableSchema: StructType, tablePath: String,
                              partitionCols: Seq[String], cmd: Command,
                              branch: Option[String] = None,
-                             sidecarFormat: String = "bitmap",
                              consolidateAfter: Option[Int] = None,
                              distributionMode: String = "none",
                              writeSort: Seq[String] = Nil,
@@ -99,14 +91,13 @@ class GraftOrcDeltaOperation(tableSchema: StructType, tablePath: String,
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
         new GraftOrcDeltaWrite(tablePath, info, partitionCols, branch,
-          sidecarFormat, consolidateAfter, distributionMode, writeSort,
-          orcOpts)
+          consolidateAfter, distributionMode, writeSort, orcOpts)
     }
 }
 
 /** The delta write: inserts ride the ordinary staged-file machinery
-  * ([[GraftOrcWriterFactory]]); deletes stream into per-task position
-  * sidecar files staged under `_staging/<writeId>/__deletes/`; the
+  * ([[GraftOrcWriterFactory]]); deletes accumulate into one per-task
+  * deletion vector staged under `_staging/<writeId>/__deletes/`; the
   * driver commit publishes data waves, moves sidecars into
   * `_graft_deletes/`, and commits both in one snapshot
   * ([[GraftOrcWrite.publish]] delta mode).
@@ -114,7 +105,6 @@ class GraftOrcDeltaOperation(tableSchema: StructType, tablePath: String,
 class GraftOrcDeltaWrite(path: String, info: LogicalWriteInfo,
                          partitionCols: Seq[String],
                          branch: Option[String] = None,
-                         sidecarFormat: String = "bitmap",
                          consolidateAfter: Option[Int] = None,
                          distributionMode: String = "none",
                          writeSort: Seq[String] = Nil,
@@ -262,17 +252,11 @@ class GraftOrcDeltaWrite(path: String, info: LogicalWriteInfo,
       alwaysProject = partitionCols.nonEmpty))
   }
 
-  private def deleteFactory(): GraftOrcDeltaSidecarFactory = {
-    val spark = SparkSession.active
-    val delSchema = StructType(Seq(
-      StructField("f", StringType, nullable = false),
-      StructField("pos", LongType, nullable = false)))
-    val (owf, conf) = GraftOrcShims.orcWriteSupport(spark,
-      Map("compression" -> "snappy"), delSchema)
-    GraftOrcDeltaSidecarFactory(path, delSchema, owf,
-      new org.apache.spark.util.SerializableConfiguration(conf), writeId,
-      tablePrefix, sidecarFormat)
-  }
+  private def deleteFactory(): GraftOrcDeltaSidecarFactory =
+    GraftOrcDeltaSidecarFactory(path,
+      new org.apache.spark.util.SerializableConfiguration(
+        SparkSession.active.sessionState.newHadoopConf()),
+      writeId, tablePrefix)
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     override def createBatchWriterFactory(
@@ -303,7 +287,7 @@ class GraftOrcDeltaWrite(path: String, info: LogicalWriteInfo,
 }
 
 /** One delta task: an inner data writer for inserts (absent on pure
-  * DELETE), a lazily opened position-sidecar writer for deletes.
+  * DELETE), per-file position bitmaps for deletes.
   */
 case class GraftOrcDeltaWriterFactory(data: Option[GraftOrcWriterFactory],
                                       del: GraftOrcDeltaSidecarFactory,
@@ -315,10 +299,8 @@ case class GraftOrcDeltaWriterFactory(data: Option[GraftOrcWriterFactory],
 }
 
 case class GraftOrcDeltaSidecarFactory(
-    table: String, schema: StructType,
-    owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    writeId: String, tablePrefix: String, format: String = "bitmap")
+    table: String, conf: org.apache.spark.util.SerializableConfiguration,
+    writeId: String, tablePrefix: String)
 
 class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
                           taskId: Long)
@@ -332,34 +314,12 @@ class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
     inner
   }
 
-  private var delWriter: OutputWriter = _
-  private var delStaged: Path = _
-  private val delRow = new GenericInternalRow(2)
   private val referenced = collection.mutable.HashSet.empty[String]
-  // deletion-vector mode: positions accumulate into per-file bitmaps
-  // (compressed, bounded by this task's deleted rows) and ONE dv file
-  // writes at commit; row order never matters
-  private val bitmapMode = f.del.format == "bitmap"
+  // positions accumulate into per-file bitmaps (compressed, bounded by
+  // this task's deleted rows) and ONE deletion vector writes at
+  // commit; row order never matters
   private val bitmaps = collection.mutable.LinkedHashMap
     .empty[String, GraftOrcDeleteVector.PositionBitmap]
-
-  private def sidecarWriter(): OutputWriter = {
-    if (delWriter == null) {
-      val d = f.del
-      val context = new TaskAttemptContextImpl(d.conf.value,
-        new TaskAttemptID(new TaskID(
-          new org.apache.hadoop.mapreduce.JobID("graft-orc-delta", 0),
-          TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt))
-      val name = s"del-$partitionId-${UUID.randomUUID()}.orc"
-      delStaged = new Path(new Path(new Path(d.table,
-        GraftOrcWrite.StagingDir), d.writeId),
-        new Path(GraftOrcDeltaWriter.DeletesSubdir, name).toString)
-      val fs = delStaged.getFileSystem(d.conf.value)
-      fs.mkdirs(delStaged.getParent)
-      delWriter = d.owf.newInstance(delStaged.toString, d.schema, context)
-    }
-    delWriter
-  }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     val abs = id.getUTF8String(f.fileIdx).toString
@@ -368,15 +328,8 @@ class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
       s"graft-orc delta: rowId file $abs is outside the table $prefix")
     val rel = abs.substring(prefix.length)
     referenced += rel
-    if (bitmapMode) {
-      bitmaps.getOrElseUpdate(rel,
-        new GraftOrcDeleteVector.PositionBitmap)
-        .add(id.getLong(f.posIdx))
-    } else {
-      delRow.update(0, UTF8String.fromString(rel))
-      delRow.setLong(1, id.getLong(f.posIdx))
-      sidecarWriter().write(delRow)
-    }
+    bitmaps.getOrElseUpdate(rel, new GraftOrcDeleteVector.PositionBitmap)
+      .add(id.getLong(f.posIdx))
   }
 
   override def insert(row: InternalRow): Unit = dataWriter.write(row)
@@ -395,7 +348,7 @@ class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
         inner.commit().asInstanceOf[GraftOrcCommitMessage]
       else GraftOrcCommitMessage(Nil)
     val staged: Seq[String] =
-      if (bitmapMode && bitmaps.nonEmpty) {
+      if (bitmaps.nonEmpty) {
         val d = f.del
         val dest = new Path(new Path(new Path(d.table,
           GraftOrcWrite.StagingDir), d.writeId),
@@ -405,25 +358,15 @@ class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
         fsx.mkdirs(dest.getParent)
         GraftOrcDeleteVector.write(fsx, dest, bitmaps.iterator)
         Seq(dest.toString)
-      } else if (delWriter != null) {
-        delWriter.close(); Seq(delStaged.toString)
       } else Nil
     GraftOrcDeltaCommitMessage(dataMsg, staged, referenced.toSeq)
   }
 
-  override def abort(): Unit = {
-    if (inner != null) inner.abort()
-    if (delWriter != null) {
-      try delWriter.close() catch { case _: Throwable => }
-      delStaged.getFileSystem(f.del.conf.value).delete(delStaged, false)
-    }
-  }
+  // the deletion vector is written only inside commit(); a failed
+  // job's staged vectors go with its staging subtree (batch abort)
+  override def abort(): Unit = if (inner != null) inner.abort()
 
-  override def close(): Unit = {
-    if (inner != null) inner.close()
-    // delWriter closed by commit(); close-without-commit is followed by
-    // abort(), which deletes the staged sidecar
-  }
+  override def close(): Unit = if (inner != null) inner.close()
 }
 
 object GraftOrcDeltaWriter {

@@ -59,7 +59,7 @@ object GraftOrcEqDelete {
     */
   val DefaultBudgetRows: Long = 10000000L
 
-  /** Equality sidecars are `e-*.orc`; position sidecars `d-*.orc`. */
+  /** Equality sidecars are `e-*.orc`; position sidecars `dv-*.bin`. */
   def isEqualitySidecar(path: String): Boolean =
     path.substring(path.lastIndexOf('/') + 1).startsWith("e-")
 

@@ -93,10 +93,11 @@ object GraftOrcMetadataTable {
   }
 
   /** Live delete sidecars of the current snapshot — the MoR debt an
-    * operator sizes before scheduling a purge: encoding kind, bytes,
-    * deleted-position cardinality, referenced data files. Cardinality
-    * decodes the sidecars (purge-bounded small by construction); ORC
-    * forms read only the footer row count.
+    * operator sizes before scheduling a purge: kind (`deletion_vector`
+    * or `equality`), bytes, deleted-position cardinality, referenced
+    * data files. Cardinality decodes the deletion vectors
+    * (purge-bounded small by construction); equality sidecars read only
+    * the ORC footer row count.
     */
   private[v2] def deletesSchema = StructType(Seq(
     StructField("file", StringType, nullable = false),
@@ -211,7 +212,7 @@ object GraftOrcMetadataTable {
           if (GraftOrcEqDelete.isEqualitySidecar(e.path))
             Seq[Any](rel, "equality", e.length, e.mtime,
               orcRowCount(conf, e.path).orNull, null)
-          else if (GraftOrcDeleteVector.isBitmapSidecar(e.path)) {
+          else {
             val stats =
               try {
                 var card = 0L
@@ -223,9 +224,7 @@ object GraftOrcMetadataTable {
               } catch { case scala.util.control.NonFatal(_) => None }
             Seq[Any](rel, "deletion_vector", e.length, e.mtime,
               stats.map(_._1).orNull, stats.map(_._2).orNull)
-          } else
-            Seq[Any](rel, "position", e.length, e.mtime,
-              orcRowCount(conf, e.path).orNull, null)
+          }
         }
         (deletesSchema, rows)
       case "files" =>

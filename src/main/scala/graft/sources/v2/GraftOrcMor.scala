@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * of every file the predicate touches. At 100 TB that is the wrong
   * trade for the common case — a GDPR-style delete hitting 0.01% of the
   * rows of EVERY file would rewrite the entire table. Merge-on-read
-  * instead writes tiny POSITION-DELETE sidecars — plain ORC files of
-  * `(f: data-file path relative to the table, pos: row ordinal)` pairs
-  * under `_graft_deletes/` — and commits them in the next manifest
+  * instead writes tiny POSITION-DELETE sidecars — deletion vectors
+  * ([[GraftOrcDeleteVector]]: one bitmap of deleted row ordinals per
+  * data file, keyed by the file's path relative to the table) under
+  * `_graft_deletes/` — and commits them in the next manifest
   * snapshot; readers subtract the positions at scan time
   * ([[GraftOrcPartitionReaderFactory]] flips the affected scan to
   * row-wise reads, filtering each file's rows against its sorted
@@ -53,22 +54,18 @@ object GraftOrcMor {
     table.toString.stripSuffix("/") + "/"
 
   /** Evaluate `pred` over the still-live rows of `partials` and publish
-    * the matching `(f, pos)` pairs as position-delete sidecars; returns
+    * the matching `(f, pos)` pairs as deletion-vector sidecars; returns
     * their manifest entries (the caller commits them). Partition values
     * bind as per-group literals exactly like the CoW rewrite, so mixed
-    * predicates resolve. Sidecar row count = rows deleted — the whole
+    * predicates resolve. Sidecar cardinality = rows deleted — the whole
     * point: no data file is read beyond predicate evaluation, none is
     * rewritten.
     */
   def writeDeletes(spark: SparkSession, fs: FileSystem, table: Path,
                    partials: Seq[OrcFileEntry], pred: Column,
-                   schema: org.apache.spark.sql.types.StructType,
-                   format: String = "bitmap")
+                   schema: org.apache.spark.sql.types.StructType)
       : Seq[OrcFileEntry] = {
     if (partials.isEmpty) return Nil
-    require(format == "bitmap" || format == "orc",
-      s"graft-orc: invalid delete sidecar format '$format', must be " +
-        "bitmap or orc")
     val prefix = prefixOf(table)
     GraftOrcWrite.bumpPublishStamp(partials.map(_.mtime).max)
     // schema-version groups like the CoW rewrite: files of different
@@ -109,19 +106,19 @@ object GraftOrcMor {
     val nOut = math.max(1, math.ceil(partials.size / 64.0).toInt)
     val sorted = del.repartitionByRange(nOut, col("f"), col("pos"))
       .sortWithinPartitions("f", "pos")
-    if (format == "bitmap") publishBitmapSidecars(spark, fs, table, sorted)
-    else publishSidecars(spark, fs, table, sorted)
+    publishDeleteVectors(spark, fs, table, sorted)
   }
 
   /** Stage one DELETION-VECTOR sidecar per (f, pos)-sorted partition —
     * each task streams its run into per-file bitmaps and writes ONE
     * `dv-*.bin` ([[GraftOrcDeleteVector]]) — then stamp + move them
-    * into `_graft_deletes/` like the ORC form. A data file split by the
-    * range partitioner appears in two sidecars; readers union positions
-    * across sidecars, so that is correct (merely one entry less
-    * compact).
+    * into `_graft_deletes/`. A data file split by the range partitioner
+    * appears in two sidecars; readers union positions across sidecars,
+    * so that is correct (merely one entry less compact). A crash
+    * mid-move leaves unmanifested sidecars [[GraftOrcManifest.vacuum]]
+    * reclaims — never a half-applied delete.
     */
-  private def publishBitmapSidecars(spark: SparkSession, fs: FileSystem,
+  private def publishDeleteVectors(spark: SparkSession, fs: FileSystem,
                                     table: Path,
                                     del: DataFrame): Seq[OrcFileEntry] = {
     val staging = new Path(table,
@@ -172,64 +169,25 @@ object GraftOrcMor {
   }
 
   /** All live POSITION deletes as one (f, pos) DataFrame — rel paths,
-    * both encodings (ORC rows read natively; deletion vectors decode
-    * distributed, one sidecar per input split). None when empty.
+    * decoded distributed, one deletion vector per input split. None
+    * when empty.
     */
   def pairsDF(spark: SparkSession,
               posDels: Seq[OrcFileEntry]): Option[DataFrame] = {
     if (posDels.isEmpty) return None
-    val (bm, orc) = posDels.partition(e =>
-      GraftOrcDeleteVector.isBitmapSidecar(e.path))
-    val frames = Seq.newBuilder[DataFrame]
-    if (orc.nonEmpty)
-      frames += spark.read.orc(orc.map(_.path): _*)
-        .select(col("f"), col("pos"))
-    if (bm.nonEmpty) {
-      val ser = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val paths = bm.map(_.path)
-      frames += spark.createDataFrame(
-        spark.sparkContext
-          .parallelize(paths, math.min(paths.size, 32))
-          .flatMap(p => GraftOrcDeleteVector.allPairs(ser.value, p))
-          .map { case (f, pos) => org.apache.spark.sql.Row(f, pos) },
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("f",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    }
-    Some(frames.result().reduce(_ unionByName _))
-  }
-
-  /** Stage a `(f, pos)` frame under `_staging/`, then stamp + move each
-    * produced file into `_graft_deletes/`; returns the manifest entries.
-    * A crash mid-move leaves unmanifested sidecars [[GraftOrcManifest
-    * .vacuum]] reclaims — never a half-applied delete.
-    */
-  private def publishSidecars(spark: SparkSession, fs: FileSystem,
-                              table: Path,
-                              del: DataFrame): Seq[OrcFileEntry] = {
-    val staging = new Path(table,
-      s"${GraftOrcWrite.StagingDir}/mor-${UUID.randomUUID()}")
-    graft.sources.OrcTables.write(del, staging.toString)
-    val delDir = new Path(table, DeletesDir)
-    fs.mkdirs(delDir)
-    val staged = fs.listStatus(staging)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".orc"))
-      .sortBy(_.getPath.getName)
-    val entries = staged.toSeq.map { st =>
-      val stamp = GraftOrcWrite.nextPublishStamp()
-      fs.setTimes(st.getPath, stamp, -1)
-      val dest = new Path(delDir, s"d-${UUID.randomUUID()}.orc")
-      if (!fs.rename(st.getPath, dest))
-        throw new java.io.IOException(
-          s"graft-orc mor: failed to publish delete sidecar ${st.getPath}")
-      OrcFileEntry(fs.makeQualified(dest).toString, st.getLen,
-        Map.empty, stamp)
-    }
-    fs.delete(staging, true)
-    entries
+    val ser = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val paths = posDels.map(_.path)
+    Some(spark.createDataFrame(
+      spark.sparkContext
+        .parallelize(paths, math.min(paths.size, 32))
+        .flatMap(p => GraftOrcDeleteVector.allPairs(ser.value, p))
+        .map { case (f, pos) => org.apache.spark.sql.Row(f, pos) },
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("f",
+          org.apache.spark.sql.types.StringType, nullable = false),
+        org.apache.spark.sql.types.StructField("pos",
+          org.apache.spark.sql.types.LongType, nullable = false)))))
   }
 
   /** Subtract live deletes — POSITION and EQUALITY sidecars — from `df`
@@ -285,105 +243,37 @@ object GraftOrcMor {
 
   /** Executor-side: the sorted, distinct deleted positions of
     * `targetAbs` across `sidecars` (each paired with its table-root
-    * prefix). Sidecars are small by construction — rows deleted since
-    * the last purge — so each task reads them whole; the per-file ORC
-    * min/max on `f` would allow skipping, left as a refinement.
+    * prefix). Each deletion vector is a header walk plus a seek to
+    * this file's payload — only that payload is decoded.
     */
   def positionsFor(conf: Configuration,
                    sidecars: Seq[(String, String)],
                    targetAbs: String): Array[Long] = {
-    import scala.jdk.CollectionConverters._
     val out = collection.mutable.ArrayBuffer.empty[Long]
     sidecars.foreach { case (side, root) =>
       val prefix = root.stripSuffix("/") + "/"
-      if (targetAbs.startsWith(prefix) &&
-          GraftOrcDeleteVector.isBitmapSidecar(side)) {
-        // deletion vector: seek to THIS file's payload, decode only it
+      if (targetAbs.startsWith(prefix))
         GraftOrcDeleteVector.bitmapFor(conf, side,
             targetAbs.substring(prefix.length))
           .foreach(b => out ++= b.toSortedArray)
-      } else if (targetAbs.startsWith(prefix)) {
-        val rel = targetAbs.substring(prefix.length)
-        val p = new Path(side)
-        val reader = org.apache.orc.OrcFile.createReader(p,
-          org.apache.orc.OrcFile.readerOptions(conf))
-        try {
-          val names = reader.getSchema.getFieldNames.asScala
-          val fIdx = names.indexWhere(_.equalsIgnoreCase("f"))
-          val posIdx = names.indexWhere(_.equalsIgnoreCase("pos"))
-          require(fIdx >= 0 && posIdx >= 0,
-            s"graft-orc mor: sidecar $side lacks (f, pos) columns")
-          val rows = reader.rows()
-          try {
-            val batch = reader.getSchema.createRowBatch()
-            while (rows.nextBatch(batch)) {
-              val f = batch.cols(fIdx)
-                .asInstanceOf[org.apache.hadoop.hive.ql.exec.vector
-                  .BytesColumnVector]
-              val pos = batch.cols(posIdx)
-                .asInstanceOf[org.apache.hadoop.hive.ql.exec.vector
-                  .LongColumnVector]
-              var i = 0
-              while (i < batch.size) {
-                val fi = if (f.isRepeating) 0 else i
-                val pi = if (pos.isRepeating) 0 else i
-                if (f.toString(fi) == rel) out += pos.vector(pi)
-                i += 1
-              }
-            }
-          } finally rows.close()
-        } finally reader.close()
-      }
     }
     out.distinct.sorted.toArray
   }
 
   /** Driver-side: the ABSOLUTE data-file paths the position sidecars
-    * reference — one plan-time read of each (small, purge-bounded)
-    * sidecar, so scan tasks over UNREFERENCED files skip per-task
-    * sidecar I/O and per-row position checks entirely.
+    * reference — each deletion vector's header IS its referenced-file
+    * index, so scan tasks over UNREFERENCED files skip per-task sidecar
+    * I/O and per-row position checks entirely.
     */
   def referencedFiles(conf: Configuration,
-                      sidecars: Seq[(String, String)]): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    val out = collection.mutable.HashSet.empty[String]
-    sidecars.foreach { case (side, root) =>
+                      sidecars: Seq[(String, String)]): Set[String] =
+    sidecars.iterator.flatMap { case (side, root) =>
       val prefix = root.stripSuffix("/") + "/"
-      if (GraftOrcDeleteVector.isBitmapSidecar(side)) {
-        // deletion vector: the header IS the referenced-file index
-        GraftOrcDeleteVector.files(conf, side)
-          .foreach(rel => out += prefix + rel)
-      } else {
-      val reader = org.apache.orc.OrcFile.createReader(new Path(side),
-        org.apache.orc.OrcFile.readerOptions(conf))
-      try {
-        val names = reader.getSchema.getFieldNames.asScala
-        val fIdx = names.indexWhere(_.equalsIgnoreCase("f"))
-        require(fIdx >= 0,
-          s"graft-orc mor: sidecar $side lacks an (f) column")
-        val rows = reader.rows()
-        try {
-          val batch = reader.getSchema.createRowBatch()
-          while (rows.nextBatch(batch)) {
-            val f = batch.cols(fIdx)
-              .asInstanceOf[org.apache.hadoop.hive.ql.exec.vector
-                .BytesColumnVector]
-            var i = 0
-            while (i < batch.size) {
-              out += prefix + f.toString(if (f.isRepeating) 0 else i)
-              i += 1
-            }
-          }
-        } finally rows.close()
-      } finally reader.close()
-      }
-    }
-    out.toSet
-  }
+      GraftOrcDeleteVector.files(conf, side).map(prefix + _)
+    }.toSet
 
   /** Consolidate live POSITION sidecars: union every live `(f, pos)`
-    * pair — both encodings — into a minimal set of deletion-vector
-    * sidecars and commit ONE snapshot that swaps them in, retiring the
+    * pair into a minimal set of deletion-vector sidecars and commit ONE snapshot that swaps them in, retiring the
     * N accumulated per-commit sidecars. PURE METADATA + sidecar bytes:
     * no data file is read or rewritten, which is why this is the cheap
     * maintenance step between purges (Iceberg v3's DV maintenance has
@@ -443,7 +333,7 @@ object GraftOrcMor {
     val nOut = math.max(1, math.ceil(posDels.size / 64.0).toInt)
     val sorted = pairs.repartitionByRange(nOut, col("f"), col("pos"))
       .sortWithinPartitions("f", "pos")
-    val fresh = publishBitmapSidecars(spark, fs, qt, sorted)
+    val fresh = publishDeleteVectors(spark, fs, qt, sorted)
     try {
       GraftOrcManifest.commitSwap(fs, qt,
         remove = Set.empty, add = Nil,

@@ -89,7 +89,7 @@ object GraftOrcProcedures {
     },
 
     proc("consolidate_deletes",
-      "union all live position-delete sidecars (both encodings) into " +
+      "union all live position-delete sidecars into " +
         "minimal deletion vectors — pure metadata + sidecar bytes, no " +
         "data rewritten; the cheap step between purges",
       Array(in("table", StringType)),

@@ -809,12 +809,7 @@ object GraftOrcWrite {
       val len = fs.getFileStatus(src).getLen
       val stamp = nextPublishStamp()
       fs.setTimes(src, stamp, -1)
-      // the published name carries the ENCODING: dv-*.bin deletion
-      // vectors vs d-*.orc position rows (readers dispatch on it)
-      val dest =
-        if (src.getName.endsWith(".bin"))
-          new Path(delDir, s"dv-${UUID.randomUUID()}.bin")
-        else new Path(delDir, s"d-${UUID.randomUUID()}.orc")
+      val dest = new Path(delDir, s"dv-${UUID.randomUUID()}.bin")
       if (!fs.rename(src, dest))
         throw new java.io.IOException(
           s"graft-orc delta: failed to publish delete sidecar $src")

@@ -30,16 +30,14 @@ class GraftOrcConsolidateSpec extends AnyFunSuite {
   private def seeded: DataFrame =
     spark.range(400).select($"id", ($"id" % 100).cast("double").as("bal"))
 
-  private def morTable(tag: String, fmt: String = "bitmap")
-      : (String, String) = {
+  private def morTable(tag: String): (String, String) = {
     val dir = Files.createTempDirectory(s"graft-cons-$tag").toString
     seeded.repartition(4).write.format("graft-orc")
       .option("graft.manifest", "true").mode("append").save(dir)
     val name = s"g_cons_$tag"
     spark.sql(s"DROP TABLE IF EXISTS $name")
     spark.sql(s"CREATE TABLE $name USING `graft-orc` LOCATION '$dir' " +
-      "TBLPROPERTIES('graft.delete_mode'='mor'," +
-      s"'graft.delete_sidecar_format'='$fmt')")
+      "TBLPROPERTIES('graft.delete_mode'='mor')")
     (dir, name)
   }
 
@@ -47,17 +45,15 @@ class GraftOrcConsolidateSpec extends AnyFunSuite {
     spark.read.format("graft-orc").load(dir)
       .select($"id").as[Long].collect().sorted.toSeq
 
-  test("N per-commit sidecars (mixed dv + ORC encodings) consolidate " +
-    "into one deletion vector; content identical; re-run no-ops") {
-    val (dir, t) = morTable("mixed")
+  test("N per-commit sidecars consolidate into one deletion vector; " +
+    "re-run no-ops") {
+    val (dir, t) = morTable("many")
     try {
-      // five small DELETE commits -> five bitmap sidecars
-      (0 until 5).foreach(i =>
+      // six small DELETE commits -> six deletion vectors
+      (0 until 6).foreach(i =>
         spark.sql(s"DELETE FROM $t WHERE id % 40 = $i"))
-      // one more under the row-ORC encoding (mixed-encoding table)
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES(" +
-        "'graft.delete_sidecar_format'='orc')")
-      spark.sql(s"DELETE FROM $t WHERE id % 40 = 5")
+      assert(ids(dir) === seeded.filter($"id" % 40 >= 6)
+        .select($"id").as[Long].collect().sorted.toSeq)
       val before = snapshot(dir)
       assert(before.deletes.size >= 6,
         s"expected >=6 accumulated sidecars, got ${before.deletes.size}")
@@ -72,7 +68,7 @@ class GraftOrcConsolidateSpec extends AnyFunSuite {
       assert(after.entries.map(_.path).toSet === dataFiles,
         "consolidation must not touch data files")
       assert(after.deletes.size === 1 &&
-        GraftOrcDeleteVector.isBitmapSidecar(after.deletes.head.path))
+        new Path(after.deletes.head.path).getName.startsWith("dv-"))
       assert(ids(dir) === survivors,
         "consolidation must not change the table's content")
       // idempotence: one live sidecar -> nothing to gain
@@ -151,7 +147,6 @@ class GraftOrcConsolidateSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t USING `graft-orc` LOCATION '$dir' " +
       "TBLPROPERTIES('graft.delete_mode'='mor'," +
-      "'graft.delete_sidecar_format'='bitmap'," +
       "'graft.consolidate_after'='3')")
     try {
       (0 until 7).foreach { i =>
@@ -177,7 +172,6 @@ class GraftOrcConsolidateSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.gcff.warehouse", wh)
     spark.sql("CREATE TABLE gcff.bt (id BIGINT, bal DOUBLE) " +
       "TBLPROPERTIES('graft.delete_mode'='mor'," +
-      "'graft.delete_sidecar_format'='bitmap'," +
       "'graft.consolidate_after'='3')")
     try {
       spark.sql("INSERT INTO gcff.bt " +

@@ -9,13 +9,13 @@ import graft.sources.v2.{GraftOrcDeleteVector, GraftOrcManifest, GraftOrcMor}
 import graft.sources.v2.GraftOrcDeleteVector.PositionBitmap
 
 /** Deletion-vector sidecars ([[GraftOrcDeleteVector]] — the Iceberg-v3
-  * bitmap direction for merge-on-read position deletes). Pins the
+  * bitmap encoding, graft's only position-delete encoding). Pins the
   * container math (sparse array <-> dense bitmap switch at 4096, exact
   * round trips at both shapes), the file format (header index walk,
-  * seek-to-one-file decode), and the end-to-end table behavior: the
-  * default MoR DELETE now emits `dv-*.bin`, reads/changelog/purge are
-  * bit-identical to the row-ORC encoding, both encodings mix freely on
-  * one table, and the ORC fallback stays selectable.
+  * seek-to-one-file decode), and the end-to-end table behavior: both
+  * MoR writers (SupportsDelete and the delta path) emit only
+  * `dv-*.bin`, reads/changelog/purge apply them exactly, and a snapshot
+  * that still lists a row-ORC `d-*.orc` sidecar fails the read loudly.
   */
 class GraftOrcDeleteVectorSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -75,132 +75,107 @@ class GraftOrcDeleteVectorSpec extends AnyFunSuite {
   private def seeded(n: Int) = spark.range(n)
     .selectExpr("id AS k", "cast(id % 97 as double) AS v")
 
-  private def morTable(tag: String, fmt: String): (String, String) = {
+  private def isDv(path: String): Boolean = {
+    val n = new Path(path).getName
+    n.startsWith("dv-") && n.endsWith(".bin")
+  }
+
+  private def morTable(tag: String, n: Int = 2000, parts: Int = 4,
+                       props: String = "'graft.delete_mode'='mor'")
+      : (String, String) = {
     val dir = Files.createTempDirectory(s"graft-dvt-$tag").toString
-    seeded(2000).repartition(4).write.format("graft-orc")
-      .option("graft.manifest", "true").mode("append").save(dir)
+    seeded(n).repartition(parts).write.format("graft-orc")
+      .option("graft.manifest", "true")
+      .option("graft.manifest.retain", "6").mode("append").save(dir)
     val t = s"g_dv_$tag"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t USING `graft-orc` LOCATION '$dir' " +
-      "TBLPROPERTIES('graft.delete_mode'='mor', " +
-      s"'graft.delete_sidecar_format'='$fmt')")
+      s"TBLPROPERTIES($props)")
     (dir, t)
   }
 
-  test("MoR DELETE emits dv-*.bin by default; results, point lookups, " +
-    "purge and a second stacked delete are bit-identical to the ORC " +
-    "encoding; the orc fallback still writes d-*.orc") {
-    val (bdir, bt) = morTable("bitmap", "bitmap")
-    val (odir, ot) = morTable("orc", "orc")
-    // translatable predicates -> the SupportsDelete MoR path (an
-    // untranslatable one routes through the DELTA writer, which keeps
-    // the ORC sidecar encoding by design — covered by the mixing test)
-    def run(t: String): Unit = {
-      spark.sql(s"DELETE FROM $t WHERE k >= 300 AND k < 900")
-      spark.sql(s"DELETE FROM $t WHERE k >= 1500")
-    }
-    run(bt); run(ot)
-    val bSnap = GraftOrcManifest.readSnapshot(fsOf(bdir), new Path(bdir)).get
-    val oSnap = GraftOrcManifest.readSnapshot(fsOf(odir), new Path(odir)).get
-    assert(bSnap.deletes.nonEmpty && bSnap.deletes.forall(e =>
-      GraftOrcDeleteVector.isBitmapSidecar(e.path)),
-      bSnap.deletes.map(_.path).toString)
-    assert(oSnap.deletes.nonEmpty && oSnap.deletes.forall(e =>
-      e.path.endsWith(".orc")))
-    // the deletion vectors are the smaller encoding even at this size
-    assert(bSnap.deletes.map(_.length).sum <
-      oSnap.deletes.map(_.length).sum,
-      s"dv ${bSnap.deletes.map(_.length).sum} vs " +
-        s"orc ${oSnap.deletes.map(_.length).sum}")
-    def state(dir: String) = spark.read.format("graft-orc").load(dir)
+  private def snapshot(dir: String): GraftOrcManifest.Snapshot =
+    GraftOrcManifest.readSnapshot(fsOf(dir), new Path(dir)).get
+
+  private def state(dir: String): Seq[(Long, Double)] =
+    spark.read.format("graft-orc").load(dir)
       .as[(Long, Double)].collect().sorted.toSeq
+
+  test("MoR DELETE writes only dv-*.bin; results, lookups, stacked " +
+    "deletes, purge") {
+    val (dir, t) = morTable("bitmap")
+    // translatable predicates -> the SupportsDelete MoR path (an
+    // untranslatable one routes through the DELTA writer — next test)
+    spark.sql(s"DELETE FROM $t WHERE k >= 300 AND k < 900")
+    spark.sql(s"DELETE FROM $t WHERE k >= 1500")
+    val snap = snapshot(dir)
+    assert(snap.deletes.nonEmpty && snap.deletes.forall(e => isDv(e.path)),
+      snap.deletes.map(_.path).toString)
     val want = (0L until 2000L)
       .filterNot(k => (k >= 300 && k < 900) || k >= 1500)
       .map(k => (k, (k % 97).toDouble))
-    assert(state(bdir) == want)
-    assert(state(odir) == want)
+    assert(state(dir) == want)
     // point lookup through the row-wise delete wrapper
-    assert(spark.sql(s"SELECT v FROM $bt WHERE k = 4")
+    assert(spark.sql(s"SELECT v FROM $t WHERE k = 4")
       .as[Double].collect().toSeq == Seq(4.0))
-    assert(spark.sql(s"SELECT v FROM $bt WHERE k = 4000")
+    assert(spark.sql(s"SELECT v FROM $t WHERE k = 4000")
       .as[Double].collect().isEmpty)
-    // purge materializes identically over both encodings
-    assert(GraftOrcMor.purge(spark, bdir) > 0)
-    assert(GraftOrcMor.purge(spark, odir) > 0)
-    assert(state(bdir) == want && state(odir) == want)
-    assert(GraftOrcManifest.readSnapshot(fsOf(bdir), new Path(bdir))
-      .get.deletes.isEmpty)
-    spark.sql(s"DROP TABLE IF EXISTS $bt")
-    spark.sql(s"DROP TABLE IF EXISTS $ot")
-  }
-
-  test("the DELTA path (MoR UPDATE/MERGE and untranslatable DELETEs) " +
-    "also writes deletion vectors by default; orc stays selectable; " +
-    "results exact either way") {
-    def mkTable(tag: String, fmt: String): (String, String) = {
-      val dir = Files.createTempDirectory(s"graft-dvd-$tag").toString
-      seeded(1000).repartition(2).write.format("graft-orc")
-        .option("graft.manifest", "true").mode("append").save(dir)
-      val t = s"g_dvd_$tag"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"CREATE TABLE $t USING `graft-orc` LOCATION '$dir' " +
-        "TBLPROPERTIES('graft.delete_mode'='mor', " +
-        "'graft.update_mode'='mor', 'graft.merge_mode'='mor', " +
-        s"'graft.delete_sidecar_format'='$fmt')")
-      (dir, t)
-    }
-    for ((fmt, wantBin) <- Seq(("bitmap", true), ("orc", false))) {
-      val (dir, t) = mkTable(fmt, fmt)
-      // untranslatable predicate -> the DELTA delete path
-      spark.sql(s"DELETE FROM $t WHERE k % 7 = 3")
-      // MoR UPDATE: position delta + insert in one commit
-      spark.sql(s"UPDATE $t SET v = -1.0 WHERE k % 11 = 5")
-      val snap = GraftOrcManifest.readSnapshot(fsOf(dir), new Path(dir)).get
-      assert(snap.deletes.nonEmpty)
-      assert(snap.deletes.forall(e =>
-        GraftOrcDeleteVector.isBitmapSidecar(e.path) == wantBin),
-        s"$fmt: ${snap.deletes.map(_.path)}")
-      val got = spark.sql(s"SELECT k, v FROM $t ORDER BY k")
-        .as[(Long, Double)].collect().toSeq
-      val want = (0L until 1000L).filterNot(_ % 7 == 3)
-        .map(k => (k, if (k % 11 == 5) -1.0 else (k % 97).toDouble))
-      assert(got == want, s"$fmt delta state diverged")
-      // purge materializes over the delta-written encoding too
-      assert(GraftOrcMor.purge(spark, dir) > 0)
-      assert(spark.sql(s"SELECT count(*) FROM $t").as[Long]
-        .collect().head == want.size)
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
-  }
-
-  test("the `deletes` metadata table sizes the MoR debt: kind, bytes, " +
-    "cardinality and referenced files per sidecar, across all three " +
-    "encodings") {
-    val dir = Files.createTempDirectory("graft-dv-meta").toString
-    seeded(600).repartition(2).write.format("graft-orc")
-      .option("graft.manifest", "true").mode("append").save(dir)
-    val t = "g_dv_meta"
+    assert(spark.sql(s"SELECT v FROM $t WHERE k = 1600")
+      .as[Double].collect().isEmpty)
+    // purge materializes the vectors and retires them
+    assert(GraftOrcMor.purge(spark, dir) > 0)
+    assert(state(dir) == want)
+    assert(snapshot(dir).deletes.isEmpty)
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t USING `graft-orc` LOCATION '$dir' " +
-      "TBLPROPERTIES('graft.delete_mode'='mor', " +
-      "'graft.delete_sidecar_format'='orc')")
-    spark.sql(s"DELETE FROM $t WHERE k < 50")              // position orc
-    spark.sql(s"ALTER TABLE $t SET " +
-      "TBLPROPERTIES('graft.delete_sidecar_format'='bitmap')")
-    spark.sql(s"DELETE FROM $t WHERE k >= 550")            // dv
+  }
+
+  test("the DELTA path (MoR UPDATE/MERGE, untranslatable DELETE) writes " +
+    "only dv-*.bin") {
+    val (dir, t) = morTable("delta", n = 1000, parts = 2,
+      props = "'graft.delete_mode'='mor', 'graft.update_mode'='mor', " +
+        "'graft.merge_mode'='mor'")
+    // untranslatable predicate -> the DELTA delete path
+    spark.sql(s"DELETE FROM $t WHERE k % 7 = 3")
+    // MoR UPDATE: position delta + insert in one commit
+    spark.sql(s"UPDATE $t SET v = -1.0 WHERE k % 11 = 5")
+    // MoR MERGE: matched keys update, the rest insert
+    spark.range(990, 1010).selectExpr("id AS k", "CAST(5.0 AS DOUBLE) AS v")
+      .createOrReplaceTempView("g_dvd_src")
+    spark.sql(s"MERGE INTO $t USING g_dvd_src s ON $t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    val snap = snapshot(dir)
+    assert(snap.deletes.nonEmpty && snap.deletes.forall(e => isDv(e.path)),
+      snap.deletes.map(_.path).toString)
+    val got = spark.sql(s"SELECT k, v FROM $t ORDER BY k")
+      .as[(Long, Double)].collect().toSeq
+    val want = ((0L until 1000L).filterNot(_ % 7 == 3)
+      .map(k => k -> (if (k % 11 == 5) -1.0 else (k % 97).toDouble))
+      .toMap ++ (990L until 1010L).map(_ -> 5.0)).toSeq.sorted
+    assert(got == want, "delta state diverged")
+    // purge materializes the delta-written vectors too
+    assert(GraftOrcMor.purge(spark, dir) > 0)
+    assert(state(dir) == want)
+    spark.catalog.dropTempView("g_dvd_src")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the `deletes` metadata table: deletion_vector + equality kinds, " +
+    "cardinalities") {
+    val (dir, t) = morTable("meta", n = 600, parts = 2)
+    spark.sql(s"DELETE FROM $t WHERE k < 50")
+    spark.sql(s"DELETE FROM $t WHERE k >= 550")
     graft.sources.v2.GraftOrcEqDelete.upsert(spark, dir,  // equality
       Seq((100L, 0.0)).toDF("k", "v"), Seq("k"))
     val meta = graft.sources.v2.GraftOrcMetadata.deletes(spark, dir)
       .collect().map(r => (r.getString(1),
         Option(r.get(4)).map(_.asInstanceOf[Long]),
         Option(r.get(5)).map(_.asInstanceOf[Long])))
-    assert(meta.map(_._1).toSet ==
-      Set("position", "deletion_vector", "equality"), meta.toSeq)
+    assert(meta.map(_._1).toSet == Set("deletion_vector", "equality"),
+      meta.toSeq)
     val dv = meta.filter(_._1 == "deletion_vector")
-    assert(dv.map(_._2.get).sum == 50, s"dv cardinality: ${dv.toSeq}")
+    assert(dv.map(_._2.get).sum == 100, s"dv cardinality: ${dv.toSeq}")
     assert(dv.forall(_._3.exists(_ >= 1)))
-    val posCard = meta.filter(_._1 == "position").map(_._2.get).sum
-    assert(posCard == 50, s"position cardinality $posCard")
     assert(meta.filter(_._1 == "equality").forall(_._2.contains(1L)))
     // the catalog identifier form resolves too
     val wh = Files.createTempDirectory("graft-dvmeta-wh").toString
@@ -221,35 +196,47 @@ class GraftOrcDeleteVectorSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("both encodings MIX on one table: an orc-era sidecar and a dv " +
-    "sidecar apply together; changelog reconstructs deletes from the " +
-    "dv encoding") {
-    val dir = Files.createTempDirectory("graft-dv-mix").toString
-    seeded(1000).repartition(2).write.format("graft-orc")
-      .option("graft.manifest", "true")
-      .option("graft.manifest.retain", "6").mode("append").save(dir)
-    val t = "g_dv_mix"
+  test("the changelog rebuilds MoR deletes from their deletion vectors") {
+    val (dir, t) = morTable("cdc", n = 1000, parts = 2)
+    spark.sql(s"DELETE FROM $t WHERE k < 100")          // seq 2
+    spark.sql(s"DELETE FROM $t WHERE k >= 900")         // seq 3
+    assert(snapshot(dir).deletes.forall(e => isDv(e.path)))
+    assert(state(dir).map(_._1) == (100L until 900L))
+    def deleted(from: Long, to: Long): Seq[Long] =
+      graft.sources.v2.GraftOrcChangelog
+        .between(spark, dir, startSnapshotId = from, endSnapshotId = Some(to))
+        .filter($"_change_type" === "delete")
+        .select($"k").as[Long].collect().sorted.toSeq
+    assert(deleted(1, 2) == (0L until 100L))
+    assert(deleted(2, 3) == (900L until 1000L))
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t USING `graft-orc` LOCATION '$dir' " +
-      "TBLPROPERTIES('graft.delete_mode'='mor', " +
-      "'graft.delete_sidecar_format'='orc')")
-    spark.sql(s"DELETE FROM $t WHERE k < 100")          // orc sidecar
-    spark.sql(s"ALTER TABLE $t SET " +
-      "TBLPROPERTIES('graft.delete_sidecar_format'='bitmap')")
-    spark.sql(s"DELETE FROM $t WHERE k >= 900")         // dv sidecar
-    val snap = GraftOrcManifest.readSnapshot(fsOf(dir), new Path(dir)).get
-    val kinds = snap.deletes.map(e =>
-      GraftOrcDeleteVector.isBitmapSidecar(e.path)).toSet
-    assert(kinds == Set(true, false), snap.deletes.map(_.path).toString)
-    assert(spark.read.format("graft-orc").load(dir)
-      .as[(Long, Double)].collect().map(_._1).sorted.toSeq ==
-      (100L until 900L))
-    // changelog: the dv-encoded delete reconstructs as delete images
-    val ch = graft.sources.v2.GraftOrcChangelog
-      .between(spark, dir, startSnapshotId = 2, endSnapshotId = Some(3))
-    val dels = ch.filter($"_change_type" === "delete")
-      .select($"k").as[Long].collect().sorted.toSeq
-    assert(dels == (900L until 1000L))
+  }
+
+  test("a snapshot listing a row-ORC d-*.orc sidecar fails the read, " +
+    "naming the file") {
+    val (dir, t) = morTable("legacy", n = 200, parts = 1)
     spark.sql(s"DROP TABLE IF EXISTS $t")
+    val fs = fsOf(dir)
+    val qt = fs.makeQualified(new Path(dir))
+    val file = snapshot(dir).entries.head.path
+    // the retired encoding: an ORC file of (f, pos) rows
+    val scratch = Files.createTempDirectory("graft-dv-legacy") + "/rows"
+    Seq((file.stripPrefix(qt.toString.stripSuffix("/") + "/"), 3L))
+      .toDF("f", "pos").coalesce(1).write.orc(scratch)
+    val orc = fs.listStatus(new Path(scratch))
+      .find(_.getPath.getName.endsWith(".orc")).get
+    val legacy = new Path(new Path(qt, GraftOrcMor.DeletesDir),
+      "d-legacy.orc")
+    fs.mkdirs(legacy.getParent)
+    assert(fs.rename(orc.getPath, legacy))
+    GraftOrcManifest.commitSwap(fs, qt, remove = Set.empty, add = Nil,
+      addDeletes = Seq(graft.sources.v2.OrcFileEntry(legacy.toString,
+        fs.getFileStatus(legacy).getLen, Map.empty,
+        System.currentTimeMillis())), op = "delta")
+    val e = intercept[Exception](state(dir))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("d-legacy.orc") &&
+      m.contains("not a deletion-vector sidecar")), msgs)
   }
 }

@@ -23,6 +23,19 @@ class OperatorsSpec extends AnyFunSuite {
     assert(SparkEntry.queries.size == SparkEntry.modules.size)
   }
 
+  test("the change-feed queries leave no graft-feed checkpoint behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // the two queries' checkpoint prefixes, plus the random suffix
+    def feedDirs: Set[String] = Option(tmp.list()).toSeq.flatten
+      .filter(_.matches("graft-feed(-branch)?[0-9]+")).toSet
+    val before = feedDirs
+    Seq("rl_cdc_feed", "rl_cdc_feed_branch").foreach { name =>
+      assert(q(name).collect().nonEmpty, s"$name returned no rows")
+    }
+    val left = feedDirs -- before
+    assert(left.isEmpty, s"checkpoint directories left in $tmp: $left")
+  }
+
   test("every oracle key matches a query key") {
     val qk = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(qk))
