@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.orc.OrcFile
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.util.SerializableConfiguration
 
 /** Small-file compaction for graft-orc tables — the maintenance operation
   * a streaming-ingested table needs at scale: the sink publishes one file
@@ -500,7 +499,7 @@ object GraftOrcCompact {
     // (partition dir, staged outputs, merged inputs).
     val staging = new Path(new Path(table, GraftOrcWrite.StagingDir),
       s"compact-${UUID.randomUUID()}")
-    val sconf = new SerializableConfiguration(conf)
+    val sconf = GraftOrcConfShipping.broadcast(spark.sparkContext, conf)
     val stagingStr = staging.toString
     val merged: Seq[(String, Long, Long, Seq[String], Seq[String])] =
       if (zorderCols.isEmpty) {
@@ -510,7 +509,7 @@ object GraftOrcCompact {
           .map { case ((dir, v, sv), inputs) =>
             val out = new Path(stagingStr, s"c-${UUID.randomUUID()}.orc")
             val done = OrcFile.mergeFiles(out,
-              OrcFile.writerOptions(sconf.value),
+              OrcFile.writerOptions(sconf.value.value),
               inputs.map(i => new Path(i._1)).asJava)
             (dir, v, sv, Seq(out.toString),
               done.asScala.map(_.toString).toSeq)

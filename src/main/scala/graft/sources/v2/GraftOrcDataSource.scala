@@ -13,6 +13,7 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.orc.{OrcConf, OrcFile, TypeDescription}
 import org.apache.orc.mapred.OrcInputFormat
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.memory.MemoryMode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -30,6 +31,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StringType, 
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** `graft-orc`: a DataSource V2 ORC connector making the reference's scan
   * contracts explicit (SURVEY.md §2.A):
@@ -987,18 +989,18 @@ class GraftOrcAggScan(dataFileSchema: StructType, partitionSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val serConf = org.apache.spark.GraftSparkBridge.serializableConf(
+    val conf = GraftOrcConfShipping.broadcast(spark.sparkContext,
       spark.sparkContext.hadoopConfiguration)
     val hint = graft.sources.OrcTables.parseOptions(options).metadataSizeHint
     new GraftOrcAggReaderFactory(dataFileSchema, partitionSchema, agg,
-      aggSchema, serConf, hint)
+      aggSchema, conf, hint)
   }
 }
 
 class GraftOrcAggReaderFactory(dataFileSchema: StructType,
                                partitionSchema: StructType,
                                agg: Aggregation, aggSchema: StructType,
-                               conf: org.apache.spark.util.SerializableConfiguration,
+                               conf: Broadcast[SerializableConfiguration],
                                metadataSizeHint: Option[Long])
     extends PartitionReaderFactory {
 
@@ -1046,7 +1048,7 @@ class GraftOrcAggReaderFactory(dataFileSchema: StructType,
               // footer-only open: the metadata hint keeps this to ONE
               // ranged read per file on object stores
               val (reader, _, _) = GraftOrcTailReader.createReader(
-                new Path(ap.filePath), conf.value, ap.fileLength,
+                new Path(ap.filePath), conf.value.value, ap.fileLength,
                 metadataSizeHint)
               val partValues = new GenericInternalRow(
                 partitionSchema.fields.zip(ap.partitionValues).map {
@@ -1936,10 +1938,10 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     // same typed option semantics as the A13 contract (OrcTables)
     val parsed = graft.sources.OrcTables.parseOptions(options)
     val batchSize = parsed.batchSize.getOrElse(4096)
-    // ship the session Hadoop configuration to executor-side readers
-    // (fs.* credentials, orc.* tuning) — a bare new Configuration() would
-    // drop s3a/gcs settings on a real cluster
-    val serConf = org.apache.spark.GraftSparkBridge.serializableConf(
+    // the session Hadoop configuration (fs.* credentials, orc.* tuning —
+    // a bare new Configuration() would drop s3a/gcs settings on a real
+    // cluster) reaches the readers as one shared broadcast
+    val serConf = GraftOrcConfShipping.broadcast(spark.sparkContext,
       spark.sparkContext.hadoopConfiguration)
     // corrupt-file tolerance for lake-scale ingest: a single truncated or
     // garbage file must not kill a 100 TB scan when the user opts in.
@@ -2093,6 +2095,10 @@ object GraftOrcLog {
 /** A10: per-file vectorized reader with metric instrumentation, constant
   * partition-column vectors, and exact limit truncation.
   *
+  * `serConf` is the session Hadoop conf as one shared broadcast
+  * ([[GraftOrcConfShipping]]): the factory itself carries only its
+  * handle, and each reader copies the conf before setting its own keys.
+  *
   * `deleteSidecars` non-empty (live merge-on-read position deletes,
   * [[GraftOrcMor]]) flips the WHOLE scan to row-wise reads — Spark's
   * DSv2 exec requires partitions to agree on columnar-ness, and the
@@ -2108,7 +2114,7 @@ class GraftOrcPartitionReaderFactory(dataFileSchema: StructType,
                                      readPartitionSchema: StructType,
                                      pushedFilters: Array[Filter],
                                      limit: Option[Int], batchSize: Int,
-                                     serConf: org.apache.spark.util.SerializableConfiguration,
+                                     serConf: Broadcast[SerializableConfiguration],
                                      metadataSizeHint: Option[Long] = None,
                                      ignoreCorruptFiles: Boolean = false,
                                      emitFilePath: Boolean = false,
@@ -2150,7 +2156,7 @@ class GraftOrcPartitionReaderFactory(dataFileSchema: StructType,
     val fileAffected = morAffected.forall(_.contains(p.filePath))
     val deleted =
       if (!fileAffected) Array.empty[Long]
-      else GraftOrcMor.positionsFor(serConf.value,
+      else GraftOrcMor.positionsFor(serConf.value.value,
         deleteSidecars.toSeq, p.filePath)
     // equality deletes: the union key-tuple set of every sidecar NEWER
     // than this file (under this file's table root); empty when only
@@ -2158,7 +2164,7 @@ class GraftOrcPartitionReaderFactory(dataFileSchema: StructType,
     val eqSet: java.util.HashSet[String] =
       if (!fileAffected || eqSidecars.isEmpty)
         new java.util.HashSet[String]()
-      else GraftOrcEqDelete.keySetFor(serConf.value,
+      else GraftOrcEqDelete.keySetFor(serConf.value.value,
         eqSidecars.toSeq.collect {
           case (side, root, mtime)
               if p.filePath.startsWith(root.stripSuffix("/") + "/") =>
@@ -2303,8 +2309,9 @@ class GraftOrcPartitionReaderFactory(dataFileSchema: StructType,
   private def createColumnarReaderUnsafe(
       partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftOrcInputPartition]
-    // per-reader copy of the shipped session conf (mutated below)
-    val conf = new Configuration(serConf.value)
+    // per-reader copy of the shipped session conf (mutated below; the
+    // shipped one is shared and read-only, see GraftOrcConfShipping)
+    val conf = new Configuration(serConf.value.value)
     // A9: SARG prunes stripes/row-groups only; row-level filtering stays
     // with Catalyst's residual Filter
     OrcConf.ALLOW_SARG_TO_FILTER.setBoolean(conf, false)

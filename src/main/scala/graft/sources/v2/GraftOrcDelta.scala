@@ -4,6 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -13,6 +14,7 @@ import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.orc.GraftOrcShims
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Delta-based (merge-on-read) row-level operations — `UPDATE`, `MERGE
   * INTO`, and the non-metadata `DELETE` fallback — via DSv2
@@ -244,7 +246,7 @@ class GraftOrcDeltaWrite(path: String, info: LogicalWriteInfo,
     val (owf, conf) = GraftOrcShims.orcWriteSupport(spark,
       Map("compression" -> "snappy") ++ orcOpts, fileSchema)
     Some(GraftOrcWriterFactory(path, fileSchema, owf,
-      new org.apache.spark.util.SerializableConfiguration(conf), partSpecs,
+      GraftOrcConfShipping.broadcast(spark.sparkContext, conf), partSpecs,
       fileFieldIdx, writeId,
       // insert rows arrive as reused projection wrappers carrying exactly
       // rowSchema; partitioned tables project partition columns out, and
@@ -252,11 +254,13 @@ class GraftOrcDeltaWrite(path: String, info: LogicalWriteInfo,
       alwaysProject = partitionCols.nonEmpty))
   }
 
-  private def deleteFactory(): GraftOrcDeltaSidecarFactory =
+  private def deleteFactory(): GraftOrcDeltaSidecarFactory = {
+    val spark = SparkSession.active
     GraftOrcDeltaSidecarFactory(path,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()),
+      GraftOrcConfShipping.broadcast(spark.sparkContext,
+        spark.sessionState.newHadoopConf()),
       writeId, tablePrefix)
+  }
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     override def createBatchWriterFactory(
@@ -299,7 +303,7 @@ case class GraftOrcDeltaWriterFactory(data: Option[GraftOrcWriterFactory],
 }
 
 case class GraftOrcDeltaSidecarFactory(
-    table: String, conf: org.apache.spark.util.SerializableConfiguration,
+    table: String, conf: Broadcast[SerializableConfiguration],
     writeId: String, tablePrefix: String)
 
 class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
@@ -354,7 +358,7 @@ class GraftOrcDeltaWriter(f: GraftOrcDeltaWriterFactory, partitionId: Int,
           GraftOrcWrite.StagingDir), d.writeId),
           new Path(GraftOrcDeltaWriter.DeletesSubdir,
             s"del-$partitionId-${UUID.randomUUID()}.bin").toString)
-        val fsx = dest.getFileSystem(d.conf.value)
+        val fsx = dest.getFileSystem(d.conf.value.value)
         fsx.mkdirs(dest.getParent)
         GraftOrcDeleteVector.write(fsx, dest, bitmaps.iterator)
         Seq(dest.toString)

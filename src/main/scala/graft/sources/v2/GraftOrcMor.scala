@@ -124,7 +124,7 @@ object GraftOrcMor {
     val staging = new Path(table,
       s"${GraftOrcWrite.StagingDir}/mor-${UUID.randomUUID()}")
     fs.mkdirs(staging)
-    val ser = new org.apache.spark.util.SerializableConfiguration(
+    val ser = GraftOrcConfShipping.broadcast(spark.sparkContext,
       spark.sparkContext.hadoopConfiguration)
     val stagingStr = staging.toString
     val written: Seq[String] = del.select(col("f"), col("pos")).rdd
@@ -147,7 +147,7 @@ object GraftOrcMor {
           val dest = new Path(stagingStr,
             s"dv-${UUID.randomUUID()}.bin")
           GraftOrcDeleteVector.write(
-            dest.getFileSystem(ser.value), dest, grouped)
+            dest.getFileSystem(ser.value.value), dest, grouped)
           Iterator.single(dest.toString)
         }
       }.collect().toSeq
@@ -175,13 +175,13 @@ object GraftOrcMor {
   def pairsDF(spark: SparkSession,
               posDels: Seq[OrcFileEntry]): Option[DataFrame] = {
     if (posDels.isEmpty) return None
-    val ser = new org.apache.spark.util.SerializableConfiguration(
+    val ser = GraftOrcConfShipping.broadcast(spark.sparkContext,
       spark.sparkContext.hadoopConfiguration)
     val paths = posDels.map(_.path)
     Some(spark.createDataFrame(
       spark.sparkContext
         .parallelize(paths, math.min(paths.size, 32))
-        .flatMap(p => GraftOrcDeleteVector.allPairs(ser.value, p))
+        .flatMap(p => GraftOrcDeleteVector.allPairs(ser.value.value, p))
         .map { case (f, pos) => org.apache.spark.sql.Row(f, pos) },
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("f",

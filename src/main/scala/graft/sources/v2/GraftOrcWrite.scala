@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -382,7 +383,7 @@ class GraftOrcWrite(path: String, schema: StructType,
         .startsWith("orc."))
     val (owf, conf) = GraftOrcShims.orcWriteSupport(spark, writeOptions, fileSchema)
     GraftOrcWriterFactory(path, fileSchema, owf,
-      new SerializableConfiguration(conf), partSpecs, fileFieldIdx, writeId,
+      GraftOrcConfShipping.broadcast(spark.sparkContext, conf), partSpecs, fileFieldIdx, writeId,
       alwaysProject = rowLevelMode, maxOpenWriters = maxOpenWriters)
   }
 
@@ -1153,11 +1154,13 @@ case class GraftPartCol(name: String, index: Int,
 
 /** Serializable per-task writer factory for both batch and streaming.
   * `schema` is the FILE schema (partition columns excluded);
-  * `fileFieldIdx` maps file fields to ordinals in the incoming row.
+  * `fileFieldIdx` maps file fields to ordinals in the incoming row;
+  * `conf` is the prepared write conf as a shared, read-only broadcast
+  * ([[GraftOrcConfShipping]]).
   */
 case class GraftOrcWriterFactory(table: String, schema: StructType,
                                  owf: OutputWriterFactory,
-                                 conf: SerializableConfiguration,
+                                 conf: Broadcast[SerializableConfiguration],
                                  partSpecs: Array[GraftPartCol] = Array.empty,
                                  fileFieldIdx: Array[Int] = Array.empty,
                                  writeId: String = "adhoc",
@@ -1178,7 +1181,8 @@ class GraftOrcDataWriter(f: GraftOrcWriterFactory, partitionId: Int,
                          taskId: Long, epochId: Long)
     extends DataWriter[InternalRow] {
 
-  private val context = new TaskAttemptContextImpl(f.conf.value,
+  // the context copies the shared shipped conf into its own JobConf
+  private val context = new TaskAttemptContextImpl(f.conf.value.value,
     new TaskAttemptID(new TaskID(
       new org.apache.hadoop.mapreduce.JobID("graft-orc", epochId.toInt),
       TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt))
@@ -1208,7 +1212,7 @@ class GraftOrcDataWriter(f: GraftOrcWriterFactory, partitionId: Int,
       val base = new Path(new Path(f.table, GraftOrcWrite.StagingDir), f.writeId)
       val stagedDir = if (suffix.isEmpty) base else new Path(base, suffix)
       val staged = new Path(stagedDir, name)
-      val fs = staged.getFileSystem(f.conf.value)
+      val fs = staged.getFileSystem(f.conf.value.value)
       fs.mkdirs(staged.getParent)
       val tuple = (f.owf.newInstance(staged.toString, f.schema, context),
         staged)
@@ -1287,7 +1291,7 @@ class GraftOrcDataWriter(f: GraftOrcWriterFactory, partitionId: Int,
     val stats = stagedPaths.flatMap { staged =>
       try {
         val r = org.apache.orc.OrcFile.createReader(staged,
-          org.apache.orc.OrcFile.readerOptions(f.conf.value))
+          org.apache.orc.OrcFile.readerOptions(f.conf.value.value))
         try OrcStatsEval.sidecarOf(r).map(staged.getName -> _)
         finally r.close()
       } catch { case scala.util.control.NonFatal(_) => None }
@@ -1301,7 +1305,7 @@ class GraftOrcDataWriter(f: GraftOrcWriterFactory, partitionId: Int,
     writers.values.foreach { case (w, _) => try w.close() catch {
       case _: Throwable => } }
     (finished.toSeq ++ writers.values.map(_._2)).foreach { staged =>
-      staged.getFileSystem(f.conf.value).delete(staged, false)
+      staged.getFileSystem(f.conf.value.value).delete(staged, false)
     }
     writers.clear()
     finished.clear()

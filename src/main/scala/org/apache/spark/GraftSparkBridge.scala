@@ -1,15 +1,7 @@
 package org.apache.spark
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.util.SerializableConfiguration
-
-/** Bridge to `private[spark]` core utilities (serializable Hadoop conf for
-  * shipping the session configuration to executor-side readers).
-  */
+/** Bridge to `private[spark]` core utilities. */
 object GraftSparkBridge {
-  def serializableConf(c: Configuration): SerializableConfiguration =
-    new SerializableConfiguration(c)
-
   /** Deterministic listener-bus drain (replaces sleep-based waits in
     * metric collection); `listenerBus` is `private[spark]`.
     */
