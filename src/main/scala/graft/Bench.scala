@@ -167,8 +167,8 @@ object Bench {
       "micro_graft_projection_filter_limit" ->
         (() => graftLi.select("l_orderkey", "l_quantity")
           .filter(col("l_quantity") > 20).limit(100)),
-      // footer-statistics aggregate pushdown: the count is answered from
-      // file footers (GraftOrcAggScan), no stripe I/O at all
+      // footer-statistics aggregate pushdown: the count is answered on
+      // the driver from file footers (GraftOrcAggScan), no task at all
       "micro_graft_count_footer" ->
         (() => s.read.format("graft-orc")
           .option("orc.aggregate_pushdown", "true")

@@ -501,9 +501,10 @@ object Relational {
 
     // ---------------------------------------------------------------- q72
     // Footer-statistics aggregate pushdown: a filterless global
-    // COUNT/MIN/MAX through the graft-orc connector is answered from file
-    // footers (GraftOrcAggScan — one partial row per file, zero stripe
-    // I/O; plan-asserted in GraftOrcAggPushdownSpec). At 100 TB this is a
+    // COUNT/MIN/MAX through the graft-orc connector is answered on the
+    // driver from file footers (GraftOrcAggScan — one partial row per
+    // file, merged into the final row; no task, zero stripe I/O;
+    // plan-asserted in GraftOrcAggPushdownSpec). At 100 TB this is a
     // metadata sweep instead of a full read.
     ordersFooterAgg("q72_orc_agg_pushdown", OrcData.orcPath(_, _, "orders")),
 
@@ -512,8 +513,9 @@ object Relational {
     // contributes one partial row (its partition value + footer stats) —
     // "per-partition row counts / key ranges" over a 100 TB table is a
     // metadata sweep, no data I/O (zero footer opens on manifest tables;
-    // GraftOrcAggPushdownSpec). The per-file partials merge exactly
-    // because every file belongs to exactly one group.
+    // GraftOrcAggPushdownSpec). The scan merges the per-file partials on
+    // the driver, exactly, because every file belongs to exactly one
+    // group.
     QueryDef("q103_agg_pushdown_grouped",
       (s, d) => {
         val p = OrcData.partitionedOrcPath(s, d, "lineitem", "l_returnflag")
@@ -531,10 +533,11 @@ object Relational {
 
     // --------------------------------------------------------------- q100
     // Metadata-only aggregates on a MANIFEST table: the pushed
-    // MIN/MAX/COUNT partials answer from the snapshot's stat sidecars —
-    // at 100 TB this query touches NO data file at all (not even
-    // footers; zero-open asserted in GraftOrcAggPushdownSpec). The
-    // oracle runs the same aggregates over the source parquet.
+    // MIN/MAX/COUNT answers on the driver from the snapshot's stat
+    // sidecars — at 100 TB this query touches NO data file at all (not
+    // even footers; zero-open asserted in GraftOrcAggPushdownSpec) and
+    // runs no Spark job. The oracle runs the same aggregates over the
+    // source parquet.
     ordersFooterAgg("q100_manifest_metadata_count",
       OrcData.manifestOrcPath(_, _, "orders", "o_orderkey")),
 

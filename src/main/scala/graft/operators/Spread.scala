@@ -44,13 +44,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode,
   */
 object Spread {
 
-  /** Measurement kill-switch (`SPARK_GRAFT_NO_SPREAD=1`): disables every
-    * floor so an A/B bench of the same build can price them. Never set
-    * in production paths.
-    */
-  private val disabled =
-    sys.env.get("SPARK_GRAFT_NO_SPREAD").contains("1")
-
   /** Narrow = projections/filters/aliases over leaves: plans whose
     * physical form has no exchange, so the `.rdd` partition probe can
     * never launch a job.
@@ -67,7 +60,7 @@ object Spread {
     * parallelism is below it.
     */
   def spread(df: DataFrame, key: Column): DataFrame = {
-    if (disabled || !isNarrow(df.queryExecution.analyzed)) return df
+    if (!isNarrow(df.queryExecution.analyzed)) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p, key) else df
   }

@@ -137,8 +137,9 @@ object GraftOrcDataSource {
   }
 
   /** Test hook: records plan-time footer OPENS by the statistics sweep
-    * while `recordPlanFooterReads` is on (suites run concurrently, so a
-    * bare counter could not be attributed — the spec filters by path).
+    * and the pushed-aggregate scan while `recordPlanFooterReads` is on
+    * (suites run concurrently, so a bare counter could not be
+    * attributed — the spec filters by path).
     * Manifest tables carry stat sidecars in their snapshot entries, so
     * their sweeps should not open footers at all — an assertion only a
     * hook like this can make. Off by default: zero footprint outside
@@ -774,26 +775,29 @@ class GraftOrcScanBuilder(dataSchema: StructType,
   override def pushLimit(n: Int): Boolean = { limit = Some(n); false }
 
   // Aggregate pushdown (extension beyond the reference's A-surface): a
-  // filterless global MIN/MAX/COUNT is answered from footer STATISTICS
-  // alone — one partial row per file, zero stripe I/O; Spark plans the
-  // final merge (min of minima, sum of counts) above the scan. At 100 TB
-  // this turns "SELECT count(*)/min/max FROM t" from a full read into a
-  // metadata sweep — and with GROUP BY over partition columns, one
-  // partial row per (file, its partition value): "SELECT dt, count(*)
-  // GROUP BY dt" never touches data either (AggregatePushDownUtils
-  // validates the group list is all partition columns; each file belongs
-  // to exactly one group, so per-file rows merge exactly). Gated like
-  // the built-in source (spark.sql.orc.aggregatePushdown, overridable
-  // per-read via orc.aggregate_pushdown); refused under any filter or
-  // limit (Catalyst never offers it then — the A9 all-residual contract
-  // keeps a Filter above the scan) and for float/double MIN/MAX (a
-  // NaN-bearing stripe records min/max that silently exclude it — the
-  // OrcStatsEval non-finite lesson applied to results, not pruning).
+  // filterless MIN/MAX/COUNT is answered from footer STATISTICS alone,
+  // completely, on the driver: one partial row per file (its manifest
+  // stat sidecar, else one footer read), merged by [[GraftOrcAggScan]]
+  // into the final rows, so Spark runs no task, exchange or final
+  // aggregate for it. At 100 TB this turns "SELECT count(*)/min/max
+  // FROM t" from a full read into a metadata sweep. With GROUP BY over
+  // partition columns the partial row is per (file, its partition
+  // value): "SELECT dt, count(*) GROUP BY dt" never touches data either
+  // (AggregatePushDownUtils validates the group list is all partition
+  // columns; each file belongs to exactly one group, so per-file rows
+  // merge exactly). Gated like the built-in source
+  // (spark.sql.orc.aggregatePushdown, overridable per read via
+  // orc.aggregate_pushdown); refused under any filter or limit (Catalyst
+  // never offers it then — the A9 all-residual contract keeps a Filter
+  // above the scan) and for float/double MIN/MAX (a NaN-bearing stripe
+  // records min/max that silently exclude it — the OrcStatsEval
+  // non-finite lesson applied to results, not pruning).
   private var pushedAgg: Option[(Aggregation, StructType)] = None
 
   override def pushAggregation(agg: Aggregation): Boolean = {
     val enabled = optionsMap.get("orc.aggregate_pushdown") match {
-      case Some(v) => java.lang.Boolean.parseBoolean(v.trim)
+      case Some(v) =>
+        GraftOrcDataSource.parseBooleanOption("orc.aggregate_pushdown", v)
       case None => SparkSession.active.conf
         .get("spark.sql.orc.aggregatePushdown", "false").toBoolean
     }
@@ -819,6 +823,9 @@ class GraftOrcScanBuilder(dataSchema: StructType,
       case None => false
     }
   }
+
+  // every aggregate this builder accepts is answered whole by its scan
+  override def supportCompletePushDown(agg: Aggregation): Boolean = true
 
   private def minMaxOnFloatingPoint(agg: Aggregation): Boolean = {
     def field(e: org.apache.spark.sql.connector.expressions.Expression)
@@ -936,136 +943,96 @@ private[v2] object GraftOrcAggSidecar {
     }
 }
 
-/** Footer-statistics aggregate scan: one input partition per file, each
-  * producing ONE partial row from the footer (no stripe I/O) — or, on a
-  * manifest table, straight from the entry's stat sidecar (no I/O at
-  * all); the final merge runs in Spark above the scan.
+/** Footer-statistics aggregate scan, answered completely on the driver.
+  * Each selected file contributes one partial row, from its manifest stat
+  * sidecar (no I/O) when that answers every pushed expression, else from
+  * one footer read in the bounded metadata pool. The partials merge here
+  * per group, so the rows are the final answer: Spark plans this
+  * [[LocalScan]] as a `LocalTableScanExec`, with no task, no exchange and
+  * no final aggregate above it.
   */
-case class GraftOrcAggPartition(filePath: String, fileLength: Long,
-                                partitionValues: Array[String],
-                                sidecar: Option[String] = None)
-  extends InputPartition
-
-/** Count-chunked pack of [[GraftOrcAggPartition]]s: one task emits one
-  * partial row per member file (chained per-file readers).
-  */
-case class GraftOrcAggPackedPartition(files: Array[GraftOrcAggPartition])
-  extends InputPartition
-
 class GraftOrcAggScan(dataFileSchema: StructType, partitionSchema: StructType,
                       agg: Aggregation, aggSchema: StructType,
                       index: GraftOrcFileIndex,
                       options: CaseInsensitiveMap[String])
-    extends Scan with Batch {
-
-  private def spark = SparkSession.active
+    extends LocalScan {
 
   override def readSchema(): StructType = aggSchema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftOrcAggScan files=${index.entries.size}, pushedAggregation=" +
-      agg.aggregateExpressions.map(_.describe).mkString("[", ", ", "]")
+  override def rows(): Array[InternalRow] = merged
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val perFile = index.entries.map { e =>
-      GraftOrcAggPartition(e.path, e.length,
-        partitionSchema.fields.map { f =>
-          e.partitionValues.collectFirst {
-            case (k, v) if k.equalsIgnoreCase(f.name) => v
-          }.orNull
-        }, e.stats)
+  // each group expression's partition column; -1 (not a plain column
+  // reference) leaves the sidecar path to the footer kernel
+  private val groupCols: Seq[Int] = agg.groupByExpressions.toSeq.map {
+    case nr: NamedReference if nr.fieldNames.length == 1 =>
+      partitionSchema.fields
+        .indexWhere(_.name.equalsIgnoreCase(nr.fieldNames.head))
+    case _ => -1
+  }
+
+  // physical planning may ask more than once (explain, then execute)
+  private lazy val merged: Array[InternalRow] = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val hint = graft.sources.OrcTables.parseOptions(options).metadataSizeHint
+    val partials =
+      GraftOrcFileIndex.parallelMap(index.entries)(fileRow(_, conf, hint))
+    val nGroup = groupCols.length
+    val types = aggSchema.fields.map(_.dataType)
+    val aggs = agg.aggregateExpressions.toSeq
+    // counts sum; MIN/MAX keep the extreme value, and a null (no value
+    // in that file) never wins
+    val combine: Seq[(Any, Any) => Any] = aggs.zipWithIndex.map {
+      case (m @ (_: Min | _: Max), i) =>
+        val ord = GraftOrcShims.ordering(types(nGroup + i))
+        val keepLeft = if (m.isInstanceOf[Min]) ord.lteq _ else ord.gteq _
+        (a: Any, b: Any) =>
+          if (b == null || (a != null && keepLeft(a, b))) a else b
+      case _ => (a: Any, b: Any) => a.asInstanceOf[Long] + b.asInstanceOf[Long]
     }
-    // each file contributes ONE partial row, usually from the in-plan
-    // stat sidecar (zero I/O) — per-file tasks are pure scheduler
-    // overhead at lake file counts. Chunk by COUNT to ~4 waves of
-    // parallelism, capped so a footer-read fallback task stays bounded.
-    val chunk = math.min(1024L, math.max(1L, perFile.length.toLong /
-      math.max(1L, 4L * spark.sparkContext.defaultParallelism))).toInt
-    if (chunk <= 1) perFile.toArray
-    else perFile.grouped(chunk).map { g =>
-      if (g.length == 1) g.head: InputPartition
-      else GraftOrcAggPackedPartition(g.toArray): InputPartition
+    // counts start at 0 and MIN/MAX at null, so a global aggregate over
+    // no file still answers its one row; a grouped one answers one row
+    // per group some file belongs to
+    def zero: Array[Any] =
+      aggs.map { case _: Min | _: Max => null; case _ => 0L }.toArray
+    val groups = collection.mutable.LinkedHashMap.empty[Seq[Any], Array[Any]]
+    if (nGroup == 0) groups(Nil) = zero
+    partials.foreach { r =>
+      val acc = groups.getOrElseUpdate(
+        (0 until nGroup).map(i => r.get(i, types(i))), zero)
+      acc.indices.foreach { j =>
+        acc(j) = combine(j)(acc(j), r.get(nGroup + j, types(nGroup + j)))
+      }
+    }
+    groups.iterator.map { case (key, acc) =>
+      new GenericInternalRow((key ++ acc).toArray): InternalRow
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = GraftOrcConfShipping.broadcast(spark.sparkContext,
-      spark.sparkContext.hadoopConfiguration)
-    val hint = graft.sources.OrcTables.parseOptions(options).metadataSizeHint
-    new GraftOrcAggReaderFactory(dataFileSchema, partitionSchema, agg,
-      aggSchema, conf, hint)
-  }
-}
-
-class GraftOrcAggReaderFactory(dataFileSchema: StructType,
-                               partitionSchema: StructType,
-                               agg: Aggregation, aggSchema: StructType,
-                               conf: Broadcast[SerializableConfiguration],
-                               metadataSizeHint: Option[Long])
-    extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    p match {
-      case GraftOrcAggPackedPartition(files) =>
-        return new GraftOrcChainedReader[InternalRow](files.toIndexedSeq,
-          createReader)
-      case _ => ()
+  /** One file's partial row in the footer kernel's layout: the group
+    * values (this file's partition values, in group order), then one
+    * value per pushed aggregate.
+    */
+  private def fileRow(e: OrcFileEntry, conf: Configuration,
+                      metadataSizeHint: Option[Long]): InternalRow = {
+    val partValues: Array[Any] = partitionSchema.fields.map { f =>
+      GraftOrcDataSource.internalPartitionValue(
+        e.partitionValues.collectFirst {
+          case (k, v) if k.equalsIgnoreCase(f.name) => v
+        }.orNull, f.dataType)
     }
-    val ap = p.asInstanceOf[GraftOrcAggPartition]
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      private var row: InternalRow = _
-
-      override def next(): Boolean =
-        if (emitted) false
-        else {
-          // manifest sidecar first: zero I/O when it answers every
-          // pushed expression exactly (GraftOrcAggSidecar contract)
-          // GROUP BY partition columns: the group values (this file's
-          // partition values, in group order) prefix the partial row —
-          // same layout the footer kernel produces. A group expression
-          // that is not a plain column reference falls back to the
-          // kernel.
-          lazy val groupPrefix: Option[Array[Any]] = {
-            val vs = agg.groupByExpressions.toSeq.map {
-              case nr: org.apache.spark.sql.connector.expressions
-                  .NamedReference if nr.fieldNames.length == 1 =>
-                partitionSchema.fields.zip(ap.partitionValues).collectFirst {
-                  case (f, raw) if f.name.equalsIgnoreCase(
-                    nr.fieldNames.head) =>
-                    GraftOrcDataSource.internalPartitionValue(raw, f.dataType)
-                }
-              case _ => None
-            }
-            if (vs.forall(_.isDefined)) Some(vs.map(_.get).toArray)
-            else None
-          }
-          row = ap.sidecar
-            .flatMap(sc => groupPrefix.flatMap(gp =>
-              GraftOrcAggSidecar.aggRow(sc, dataFileSchema, agg, gp)))
-            .getOrElse {
-              GraftOrcDataSource.notePlanFooterRead(ap.filePath)
-              // footer-only open: the metadata hint keeps this to ONE
-              // ranged read per file on object stores
-              val (reader, _, _) = GraftOrcTailReader.createReader(
-                new Path(ap.filePath), conf.value.value, ap.fileLength,
-                metadataSizeHint)
-              val partValues = new GenericInternalRow(
-                partitionSchema.fields.zip(ap.partitionValues).map {
-                  case (f, raw) =>
-                    GraftOrcDataSource.internalPartitionValue(raw, f.dataType)
-                }.toArray[Any])
-              try GraftOrcShims.aggRowFromFooter(reader, ap.filePath,
-                dataFileSchema, partitionSchema, agg, aggSchema, partValues)
-              finally reader.close()
-            }
-          emitted = true
-          true
-        }
-
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
+    e.stats
+      .filter(_ => groupCols.forall(_ >= 0))
+      .flatMap(GraftOrcAggSidecar.aggRow(_, dataFileSchema, agg,
+        groupCols.map(partValues).toArray))
+      .getOrElse {
+        GraftOrcDataSource.notePlanFooterRead(e.path)
+        // footer-only open: the metadata hint keeps this to ONE ranged
+        // read per file on object stores
+        val (reader, _, _) = GraftOrcTailReader.createReader(
+          new Path(e.path), conf, e.length, metadataSizeHint)
+        try GraftOrcShims.aggRowFromFooter(reader, e.path, dataFileSchema,
+          partitionSchema, agg, aggSchema, new GenericInternalRow(partValues))
+        finally reader.close()
+      }
   }
 }
 
@@ -1181,6 +1148,18 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
 
   private def spark = SparkSession.active
+
+  /** Target bytes per input split (`graft.split_size`, default 128 MB):
+    * files up to it are packed whole, larger ones cut at stripe
+    * boundaries into ranges of about this size.
+    */
+  private val targetSplitBytes: Long =
+    options.get("graft.split_size").map { v =>
+      val n = GraftOrcDataSource.parseLongOption("graft.split_size", v)
+      if (n <= 0) throw new IllegalArgumentException(
+        s"Invalid value '$v' for option 'graft.split_size', must be positive")
+      n
+    }.getOrElse(128L * 1024 * 1024)
 
   /** Live merge-on-read position-delete sidecars ([[GraftOrcMor]]) of
     * the resolved snapshot, as (sidecar path, table-root prefix) pairs.
@@ -1812,8 +1791,6 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
   // (needed only for oversized files) run in the bounded metadata pool.
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val targetSplitBytes = options.get("graft.split_size")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
     def partValues(e: OrcFileEntry): Array[String] = partValuesFor(e)
     val partTypes = readPartitionSchema.fields.map(_.dataType)
     // SPJ transform keys (empty unless this scan reports them)
@@ -1852,7 +1829,7 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
           e.schemaV, e.mtime, hv, hidCanon, hidSrcTypes)
       }
     }.flatten
-    (packSmall(smallParts, targetSplitBytes) ++ bigParts).toArray
+    (packSmall(smallParts) ++ bigParts).toArray
   }
 
   /** Streaming entry: pack one micro-batch's admitted files with the
@@ -1861,11 +1838,8 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     * change — replays admit the same file set regardless of packing.
     */
   private[v2] def packForStream(parts: Seq[GraftOrcInputPartition])
-      : Array[InputPartition] = {
-    val targetSplitBytes = options.get("graft.split_size")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    packSmall(parts, targetSplitBytes).toArray
-  }
+      : Array[InputPartition] =
+    packSmall(parts).toArray
 
   /** Bin-pack per-file partitions of SMALL files into shared tasks —
     * the same sizing formula as Spark's own `FilePartition`
@@ -1878,8 +1852,8 @@ class GraftOrcScan(dataFileSchema: StructType, partitionSchema: StructType,
     * a pack's reported `partitionKey` stays exact.
     * `graft.pack_small_files=false` restores one task per file.
     */
-  private def packSmall(parts: Seq[GraftOrcInputPartition],
-                        targetSplitBytes: Long): Seq[InputPartition] = {
+  private def packSmall(parts: Seq[GraftOrcInputPartition])
+      : Seq[InputPartition] = {
     val enabled = options.get("graft.pack_small_files").map { v =>
       GraftOrcDataSource.parseBooleanOption("graft.pack_small_files", v)
     }.getOrElse(true)

@@ -65,6 +65,12 @@ object GraftOrcShims {
       reader, filePath, dataSchema, partitionSchema, agg, aggSchema,
       partitionValues)
 
+  /** Spark's own ordering of the internal values of `dt` (the ordering
+    * its MIN/MAX aggregates compare with).
+    */
+  def ordering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
+    org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+
   /** Driver-side write preparation for the graft-orc DSv2 sink: delegate
     * to Spark's `OrcFileFormat.prepareWrite` (compression mapping, the
     * `orc.mapred.output.schema` conf key the row writer reads) and return

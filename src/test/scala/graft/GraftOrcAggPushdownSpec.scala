@@ -2,14 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Footer-statistics aggregate pushdown: filterless global MIN/MAX/COUNT
-  * answered from ORC footers (GraftOrcAggScan), verified against the same
-  * aggregates computed the slow way.
+  * answered on the driver from ORC footers and manifest sidecars
+  * (GraftOrcAggScan), verified against the same aggregates computed the
+  * slow way.
   */
 class GraftOrcAggPushdownSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,11 +28,7 @@ class GraftOrcAggPushdownSpec extends AnyFunSuite {
   private def pushed(dir: String) = spark.read.format("graft-orc")
     .option("orc.aggregate_pushdown", "true").load(dir)
 
-  // string match: AQE wraps the subtree in a leaf AdaptiveSparkPlanExec,
-  // which defeats a pattern-match collect but not toString
-  private def aggScans(q: DataFrame): Int =
-    "GraftOrcAggScan".r
-      .findAllIn(q.queryExecution.executedPlan.toString).size
+  import TestSpark.aggScans
 
   test("count(*) is answered from footers and matches the full scan") {
     val q = pushed(dir).agg(count(lit(1)).as("n"))
@@ -39,29 +37,28 @@ class GraftOrcAggPushdownSpec extends AnyFunSuite {
       spark.read.format("graft-orc").load(dir).count())
   }
 
-  test("footer-agg partitions chunk by count at high file counts; " +
-    "result stays exact") {
+  test("40 files answer on the driver with no scan task; result stays exact") {
     val d = Files.createTempDirectory("graft-agg-chunk").toString
     (0 until 40).foreach { i =>
       spark.range(i * 5, (i + 1) * 5).select($"id")
         .coalesce(1).write.format("graft-orc").mode("append").save(d)
     }
     val q = pushed(d).agg(count(lit(1)).as("n"), max($"id").as("m"))
-    assert(aggScans(q) === 1, q.queryExecution.executedPlan.toString)
-    val row = q.collect().head
-    assert(row.getLong(0) === 200L && row.getLong(1) === 199L)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scans(pl: SparkPlan): Seq[BatchScanExec] = pl match {
-      case b: BatchScanExec => Seq(b)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: QueryStageExec => scans(s.plan)
-      case other => other.children.flatMap(scans)
-    }
-    val parts = scans(q.queryExecution.executedPlan)
-      .head.inputRDD.getNumPartitions
-    assert(parts < 40 && parts > 1,
-      s"40 footer-agg files should chunk into (1, 40) tasks, got $parts")
+    assert(aggScans(q) === 1, q.queryExecution.optimizedPlan.toString)
+    // the plan is Spark's renaming projection over the scan's final rows:
+    // no file scan, no exchange, no aggregate, and no adaptive stages
+    val plan = q.queryExecution.executedPlan
+    assert(plan.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]),
+      plan.toString)
+    assert(plan.collect {
+      case a: BaseAggregateExec => a
+      case e: Exchange => e
+    }.isEmpty, plan.toString)
+    val (rows, jobs) = TestSpark.jobsDuring(q.collect())
+    assert(rows.length === 1)
+    assert(rows.head.getLong(0) === 200L && rows.head.getLong(1) === 199L)
+    // the projection runs as one single-stage job over the local rows
+    assert(jobs === 1, plan.toString)
   }
 
   test("min/max on integral columns match the full scan") {
@@ -172,6 +169,53 @@ class GraftOrcAggPushdownSpec extends AnyFunSuite {
       assert(fast.collect().head ===
         full.agg(fn(col(f.name))).collect().head, s"min/max(${f.name})")
     }
+  }
+
+  test("a zero-file table answers the global aggregate with one row, " +
+    "the grouped one with none") {
+    val empty = Files.createTempDirectory("graft-agg-empty").toString
+    def read = spark.read.format("graft-orc").schema("id BIGINT, p INT")
+      .option("orc.aggregate_pushdown", "true").load(empty)
+    val global = read.agg(count(lit(1)).as("n"), min($"id").as("m"))
+    assert(aggScans(global) === 1, global.queryExecution.optimizedPlan.toString)
+    assert(global.collect().map(_.toSeq).toSeq === Seq(Seq(0L, null)))
+    // with no file, `p` is not known as a partition column: the grouped
+    // form takes Spark's own aggregate, and must agree
+    val grouped = read.groupBy($"p")
+      .agg(count(lit(1)).as("n"), min($"id").as("m"))
+    assert(grouped.collect().isEmpty)
+  }
+
+  test("GROUP BY a partition column merges several files per group " +
+    "exactly as the unpushed aggregate does") {
+    val pdir = Files.createTempDirectory("graft-agg-group-files").toString
+    (0 until 3).foreach { i =>
+      spark.range(i * 100, (i + 1) * 100).select($"id",
+        ($"id" % 4).cast("int").as("g"), ($"id" * 7 % 13).as("v"))
+        .coalesce(1).write.format("graft-orc").partitionBy("g")
+        .mode("append").save(pdir)
+    }
+    def grouped(df: org.apache.spark.sql.DataFrame) = df.groupBy($"g")
+      .agg(count(lit(1)).as("n"), count($"v").as("nv"),
+        min($"id").as("mn"), max($"v").as("mx"))
+      .orderBy($"g")
+    val fast = grouped(pushed(pdir))
+    assert(aggScans(fast) === 1, fast.queryExecution.optimizedPlan.toString)
+    val slow = grouped(spark.read.format("graft-orc").load(pdir))
+    assert(aggScans(slow) === 0)
+    val got = fast.collect().map(_.toSeq).toSeq
+    assert(got.length === 4)
+    assert(got === slow.collect().map(_.toSeq).toSeq)
+  }
+
+  test("a malformed orc.aggregate_pushdown fails, naming the option") {
+    val e = intercept[Exception](spark.read.format("graft-orc")
+      .option("orc.aggregate_pushdown", "ture").load(dir)
+      .agg(count(lit(1))).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(msgs.contains("orc.aggregate_pushdown") && msgs.contains("ture"),
+      msgs)
   }
 
   test("pushdown is off by default, matching the built-in source gate") {

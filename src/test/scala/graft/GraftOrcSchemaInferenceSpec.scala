@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -13,35 +11,10 @@ import org.apache.spark.sql.functions._
 class GraftOrcSchemaInferenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.jobsDuring
 
   private def freshDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Jobs started from this thread while `body` runs (a job group keeps
-    * other suites' jobs out of the count).
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"infer-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(p =>
-            group == p.getProperty("spark.jobGroup.id")))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "schema inference spec")
-    try {
-      val out = body
-      org.apache.spark.GraftSparkBridge.waitUntilListenerBusEmpty(sc)
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Every `.orc` data file under `dir`, hidden directories excluded. */
   private def orcFiles(dir: String): Seq[String] = {

@@ -331,6 +331,16 @@ class GraftOrcSourceSpec extends AnyFunSuite {
     assert(a === b)
   }
 
+  test("graft.split_size must be a positive long; a bad value fails naming it") {
+    for (bad <- Seq("64k", "0", "-1")) {
+      val e = intercept[IllegalArgumentException](spark.read
+        .format("graft-orc").option("graft.split_size", bad).load(orcPath)
+        .count())
+      assert(e.getMessage.contains("graft.split_size") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("SQL DDL: CREATE TEMPORARY VIEW ... USING graft-orc (register_orc_table analogue)") {
     spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW graft_ddl_li
                  |USING `graft-orc` OPTIONS (path '$orcPath')""".stripMargin)

@@ -369,6 +369,53 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("dd_semdedup: centroid assignment plans no Window, and no Exchange " +
+    "between the crossJoin and the partial max_by") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{MaxBy, Partial}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
+    // the assignment exactly as dd_semdedup's semDedupSummary builds it
+    val assigned = graft.operators.Dedup.semDedupAssign(
+      graft.operators.Spread.spread(Tables.embeddings(spark, sf), col("vec_id")))
+    // before execution, the adaptive plan's current plan is the initial
+    // physical plan with every exchange in place
+    val p = assigned.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    assert(p.find(_.nodeName.startsWith("Window")).isEmpty, p.toString)
+    val partial = p.collectFirst {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[MaxBy]) => a
+    }.getOrElse(fail(s"no partial max_by:\n$p"))
+    // the nodes from the partial aggregate down to the crossJoin
+    def pathToJoin(n: SparkPlan): Option[List[SparkPlan]] = n match {
+      case j: BaseJoinExec => Some(List(j))
+      case _ => n.children.iterator.flatMap(pathToJoin).nextOption().map(n :: _)
+    }
+    val path = pathToJoin(partial).getOrElse(fail(s"no join below:\n$partial"))
+    assert(!path.exists(_.isInstanceOf[Exchange]),
+      path.map(_.nodeName).mkString(" <- "))
+  }
+
+  test("rl_cdc_feed: the CDC position pairs are never de-duplicated") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val pairCols = Set("__cdc_dfile", "__cdc_dpos")
+    val p = SparkEntry.queries("rl_cdc_feed")(spark, sf)
+      .queryExecution.optimizedPlan
+    assert(p.find(_.output.exists(a => pairCols(a.name))).isDefined,
+      s"no CDC pairs in the plan:\n$p")
+    val distinctOnPairs = p.collect {
+      case a: Aggregate if a.groupingExpressions
+        .exists(_.references.exists(r => pairCols(r.name))) => a
+    }
+    assert(distinctOnPairs.isEmpty, distinctOnPairs.mkString("\n"))
+  }
+
   test("q96: RANGE window runs over the pre-aggregated (user, day) frame") {
     val p = plan("q96_rolling_3day_peak")
     // two aggregates (day rollup, user peak) + one window; a raw-event

@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+
+import graft.sources.v2.GraftOrcAggScan
 
 /** One shared local session for all suites. */
 object TestSpark {
@@ -30,6 +35,42 @@ object TestSpark {
     try body finally saved.foreach {
       case (k, Some(v)) => System.setProperty(k, v)
       case (k, None) => System.clearProperty(k)
+    }
+  }
+
+  /** How many scans of `df`'s optimized plan are a pushed graft-orc
+    * aggregate ([[GraftOrcAggScan]]). The physical plan cannot tell: the
+    * pushed aggregate executes as a `LocalTableScanExec`, which does not
+    * name the scan it came from.
+    */
+  def aggScans(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftOrcAggScan] => r
+    }.size
+
+  /** Jobs started from this thread while `body` runs (a job group keeps
+    * other suites' jobs out of the count).
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p =>
+            group == p.getProperty("spark.jobGroup.id")))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-counting spec")
+    try {
+      val out = body
+      org.apache.spark.GraftSparkBridge.waitUntilListenerBusEmpty(sc)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 
